@@ -11,8 +11,10 @@ receiver it replaces. The socket source (S2) is kept for dev/tests.
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
+
+from sparkstreamingflume_spark.functions import lines as L
 
 
 def file_drop(spark: SparkSession, landing_dir: str, max_files_per_trigger: int | None = None) -> DataFrame:
@@ -52,48 +54,87 @@ def rate(spark: SparkSession, rows_per_second: int = 1000) -> DataFrame:
 # ---------------------------------------------------------------------------
 
 
-def _load_tsv(spark: SparkSession, path: str) -> DataFrame:
+def _load_map(
+    spark: SparkSession,
+    path: str,
+    partner: str,
+    keep: Column,
+    key: list[int],
+    value: int,
+) -> DataFrame:
     """S3 — side-file read (byte-reader readFromHDFS,
-    src/StreamingSocketProcess.scala:35-44, becomes a distributed CSV scan)."""
-    return spark.read.csv(path, sep="\t", header=False)
+    src/StreamingSocketProcess.scala:35-44), loaded once and materialized.
+
+    Each line is split with Java ``split("\\t")`` semantics
+    (:func:`functions.lines.line_fields`), so the field count is the
+    line's own, not the first line's. An empty field counts as missing.
+    ``keep`` guards the fields, then ``key`` fields join with ',' into
+    ``map_key`` and field ``value`` becomes ``map_value``.
+
+    The deduplicated frame is written to the block manager by an eager
+    ``localCheckpoint()`` before this returns, so the file is read once per
+    call and every micro-batch that joins against the map reads the stored
+    rows (no file scan, no shuffle) — the reference's startup broadcast
+    (src/StreamingSocketProcess.scala:110-120). The blocks are not part of
+    the cache, so ``spark.catalog.clearCache()`` does not drop them. On a
+    multi-executor cluster a lost executor loses its blocks; a query
+    reading them then fails and restarts from its checkpoint, which loads
+    the maps again. To refresh a map, load it again and restart the query.
+    """
+    arr = L.line_fields("value", sep="\t")
+    # one partition: the whole map is broadcast to every batch anyway, and
+    # one task dedups it without a shuffle
+    fields = spark.read.text(path).coalesce(1).select(
+        *[F.nullif(F.get(arr, i), F.lit("")).alias(f"f{i}") for i in range(max(*key, value) + 1)],
+        F.size(arr).alias("width"),
+    )
+    lookup = (
+        fields.filter(keep)
+        .select(
+            F.concat_ws(",", *[f"f{i}" for i in key]).alias("map_key"),
+            F.col(f"f{value}").alias("map_value"),
+        )
+        .dropDuplicates(["map_key"])
+        .localCheckpoint(eager=True)
+    )
+    if lookup.isEmpty():
+        raise ValueError(f"{partner} lookup {path}: no line passes the field guard")
+    return lookup
 
 
 def load_lookup_yaxin(spark: SparkSession, path: str) -> DataFrame:
     """S4 — ``readFromHDFS11`` (src/StreamingSocketProcess.scala:46-59):
-    keep 3-field lines, key = f0 + ',' + f1, value = f2.
+    keep lines of exactly 3 non-empty fields, key = f0 + ',' + f1,
+    value = f2.
 
-    Returns (map_key, map_value); duplicate keys keep one arbitrary value
-    (the reference's HashMap kept the last line read — §2.8; at-scale we
-    make the dim unique explicitly so join cardinality is defined).
+    Returns (map_key, map_value), one row per key; for a duplicate key the
+    value is fixed when the map is loaded (the reference's HashMap kept
+    the last line read — §2.8; at scale the dim is made unique explicitly
+    so join cardinality is defined). The file is read once per call and
+    every micro-batch shares the result; to refresh the map, load it again
+    and restart the query. See :func:`_load_map` for where the rows live.
+    Raises ``ValueError`` naming the file when no line passes the guard.
     """
-    df = _load_tsv(spark, path)
-    cols = df.columns
-    if len(cols) < 3:
-        raise ValueError(f"yaxin lookup needs >=3 TSV columns, got {cols}")
-    three = df.filter(
-        F.col(cols[0]).isNotNull()
-        & F.col(cols[1]).isNotNull()
-        & F.col(cols[2]).isNotNull()
+    return _load_map(
+        spark,
+        path,
+        "yaxin",
+        (F.col("width") == 3) & F.col("f0").isNotNull() & F.col("f1").isNotNull() & F.col("f2").isNotNull(),
+        key=[0, 1],
+        value=2,
     )
-    return three.select(
-        F.concat_ws(",", cols[0], cols[1]).alias("map_key"),
-        F.col(cols[2]).alias("map_value"),
-    ).dropDuplicates(["map_key"])
 
 
 def load_lookup_yiyang(spark: SparkSession, path: str) -> DataFrame:
     """S5 — ``readFromHDFS22`` (src/StreamingSocketProcess.scala:61-74):
-    key = f1 + ',' + f2, value = f5 (7-field guard as in
-    src/ProcessSums.scala:68)."""
-    df = _load_tsv(spark, path)
-    cols = df.columns
-    if len(cols) < 6:
-        raise ValueError(f"yiyang lookup needs >=6 TSV columns, got {cols}")
-    return (
-        df.filter(F.col(cols[5]).isNotNull())
-        .select(
-            F.concat_ws(",", cols[1], cols[2]).alias("map_key"),
-            F.col(cols[5]).alias("map_value"),
-        )
-        .dropDuplicates(["map_key"])
-    )
+    keep lines whose field 5 is present, key = f1 + ',' + f2, value = f5
+    (7-field guard as in src/ProcessSums.scala:68).
+
+    Returns (map_key, map_value), one row per key; for a duplicate key the
+    value is fixed when the map is loaded. The file is read once per call
+    and every micro-batch shares the result; to refresh the map, load it
+    again and restart the query. See :func:`_load_map` for where the rows
+    live. Raises ``ValueError`` naming the file when no line passes the
+    guard.
+    """
+    return _load_map(spark, path, "yiyang", F.col("f5").isNotNull(), key=[1, 2], value=5)

@@ -27,7 +27,7 @@ GROUP[4]="test_stream_knn test_stream_dedup test_stream_join test_state_index"
 GROUP[5]="test_stream_media_neardup test_multimodal"
 GROUP[6]="test_semantic_dedup test_oracle_extras test_index_overlap test_incremental_dedup"
 GROUP[7]="test_streaming test_stream_overlap test_stream_quantile test_stream_drift test_stream_sketch test_rollup_sink test_sinks test_ftp_sink test_dedup_skew test_contract"
-GROUP[8]="test_hdr_bloom_pins test_null_corpus test_empty_inputs test_bucketing test_block_scrub test_prefix_filter test_fixture_tripwire test_resample test_windowed test_text_properties test_schemas test_lines"
+GROUP[8]="test_hdr_bloom_pins test_null_corpus test_empty_inputs test_bucketing test_block_scrub test_prefix_filter test_fixture_tripwire test_resample test_windowed test_text_properties test_schemas test_lines test_sources"
 
 # completeness check: every test file must be assigned exactly once
 assigned=$(for i in "${!GROUP[@]}"; do echo ${GROUP[$i]}; done | tr ' ' '\n' | sort)
