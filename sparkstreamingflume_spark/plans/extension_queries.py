@@ -21,6 +21,8 @@ Scale design notes (each query's docstring has specifics):
 
 from __future__ import annotations
 
+import re
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
@@ -5542,10 +5544,13 @@ _ORACLE_MAT_CTES = (
 
 
 def _materialize_ctes(sql: str, names: tuple[str, ...] = _ORACLE_MAT_CTES) -> str:
-    """Add DuckDB ``AS MATERIALIZED`` to the named CTE definitions."""
-    for n in names:
-        sql = sql.replace(f"{n} AS (", f"{n} AS MATERIALIZED (")
-    return sql
+    """Add DuckDB ``AS MATERIALIZED`` to the named CTE definitions.
+
+    The name is anchored on a word boundary, so a CTE whose name merely
+    ends in a listed one (``base`` for ``e``, ``passign`` for
+    ``assign``) keeps its plain definition."""
+    pattern = r"\b(" + "|".join(map(re.escape, names)) + r") AS \("
+    return re.sub(pattern, r"\1 AS MATERIALIZED (", sql)
 
 
 # Label propagation over the kNN graph — the third promised graph

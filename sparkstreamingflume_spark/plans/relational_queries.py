@@ -378,8 +378,9 @@ def q_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     doc="Sessionization (batch): 30-min-gap session boundaries via lag + "
     "running sum, rolled up per session. The per-user window shuffle is "
     "the only exchange; at scale it partitions on user_id (hashed, "
-    "AQE-skew-splittable). Streaming twin: streaming/stateful.py "
-    "(applyInPandasWithState with idle-gap timeouts).",
+    "AQE-skew-splittable). Batch-only: the streaming sessionizer is "
+    "streaming/sessions.py, which follows q_session_window's >= gap "
+    "boundary, not this query's >.",
     tags=("relational", "window", "session"),
     bench=True,
 )
@@ -432,16 +433,17 @@ def q_sessionize(spark: SparkSession, sf_dir: str) -> DataFrame:
     FROM sess GROUP BY user_id, session_no
     """,
     doc="Sessionization via Spark's NATIVE session_window aggregate — the "
-    "third sessionizer next to the lag+cumsum batch form (q_sessionize) "
-    "and the applyInPandasWithState streaming form (streaming/stateful.py"
-    "). One combinable shuffle on user_id, merge-on-overlap semantics: a "
+    "second sessionizer next to the batch-only lag+cumsum form "
+    "(q_sessionize). One combinable shuffle on user_id, merge-on-overlap "
+    "semantics: a "
     "new session starts when the gap is >= 30 min (the window END is "
     "last-event + gap, so an event landing exactly at the end does NOT "
     "merge — note the >= vs the > in q_sessionize's boundary rule; the "
     "oracle spells the island form with >= for exactly this reason). "
-    "The same expression runs under readStream + watermark for "
-    "streaming session aggregation with state eviction — pinned "
-    "stream≡batch by tests/test_windowed.py. Extra: how-variant of "
+    "The same expression runs under readStream + watermark as the "
+    "streaming sessionizer (streaming/sessions.py), with state eviction "
+    "— pinned stream≡batch by tests/test_windowed.py and "
+    "tests/test_stream_sessions.py. Extra: how-variant of "
     "q_sessionize.",
     tags=("relational", "window", "session"),
     extra=True,

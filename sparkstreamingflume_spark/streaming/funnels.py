@@ -5,9 +5,8 @@ foreachBatch family (``transitions.py``, ``regimes.py``).
 The batch funnel is a LEFT FOLD of a 3-stage state machine over each
 user's time-ordered events, so the incremental form is exact by
 algebra: fold each micro-batch's sorted events starting FROM the
-stored accumulator. The ``applyInPandasWithState`` twin
-(``stateful.funnel_progress``) runs that fold in Python per key; this
-module runs the SAME fold as the batch query's own Catalyst
+stored accumulator. This module runs the SAME fold as the batch
+query's own Catalyst
 ``F.aggregate`` expression — literally the identical ``step`` lambda
 ``q_funnel`` certifies cross-engine — seeded from a parquet state
 index, so per-batch work is entirely JVM-side.
@@ -20,14 +19,14 @@ Per micro-batch (:func:`funnel_update_batch`):
 3. ``F.aggregate(evs, stored_or_empty, step)`` — the shared fold,
 4. a key whose s3 transitions NULL -> set emits ONE completion row
    (state kept, so replays and post-completion events are no-ops —
-   the Python twin's single-completion contract),
+   the single-completion contract),
 5. every key with s1 set appends its new accumulator as state.
 
 :func:`read_funnels` (newest accumulator per key, q_funnel's output
 columns) reproduces ``q_funnel`` bit-for-bit over the same
 in-order-fed rows (tests/test_stream_funnels_fb.py). NULL-ts rows are
-dropped on both twins. Late cross-batch events fold on arrival — the
-inherent incremental divergence all three twins document.
+dropped on both sides. Late cross-batch events fold on arrival — the
+inherent incremental divergence the regime and transition twins share.
 
 Scale posture: one key exchange per batch (the batch plan's own
 shape), a key-count-bounded state join, two appends; state is at most

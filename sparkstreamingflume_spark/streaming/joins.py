@@ -1,7 +1,7 @@
 """Streaming joins: stream-stream interval join with watermark-bounded state.
 
 The reference only ever joined a stream against a broadcast side file
-(J1/J2 — covered by ``pipeline.enrich`` / ``routed_pipeline``, the
+(J1/J2 — covered by ``pipeline.routed_pipeline_dual``, the
 stream-static shape). A complete streaming engine also needs
 STREAM x STREAM correlation — e.g. click attribution: match each
 purchase to same-user clicks in the preceding window, both sides

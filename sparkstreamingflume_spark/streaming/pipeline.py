@@ -83,57 +83,33 @@ def enrich(
     )
 
 
-def process_type(
-    df: DataFrame, rt: RecordType, lookup: DataFrame, how: str = "inner"
+def routed_pipeline_dual(
+    df: DataFrame, lookups: dict[str, DataFrame], how: str = "inner"
 ) -> DataFrame:
-    """Full per-type pipeline: conform → mask → enrich (the body of each
-    of the reference's six per-type FTP pipelines,
-    src/StreamingSocketProcess.scala:178-266).
+    """The production ingest graph: all six socket types in ONE pass over
+    the stream, enriched against every partner's map.
 
-    Fused single-split implementation: the composable conform/mask/enrich
-    functions each re-split the line (fine for one-op use; 4 splits of a
-    97-field string per record chained — measured ~35% of soak CPU), so
-    the full pipeline splits ONCE into an array column and every stage
-    reads that. Semantics are identical to the chained ops
-    (tests/test_streaming.py pins batch == chain == stream).
-    """
-    import re as _re
+    The reference loads TWO broadcast maps (yaxin + yiyang,
+    src/StreamingSocketProcess.scala:110-119) and passes both into every
+    per-type writer (src/ProcessSums.scala:334; the intended per-partner
+    ``processTable(record, mapN)`` calls are at :371-372), each partner's
+    enrichment feeding its own sink tree (/yaxin vs /yiyang).
 
-    sep_re = _re.escape(rt.sep)
-    # \z (end-of-input), not $: Java $ matches before a final \r, which
-    # would swallow the separator on CRLF-terminated records (lines.py).
-    arr0 = F.split(
-        F.regexp_replace(F.col("value"), f"{sep_re}+\\z", ""), sep_re
-    )
-    with_arr = df.withColumn("_arr", arr0)
-    conformed = with_arr.filter(F.size("_arr") == rt.n_fields)
-    masked = conformed.withColumn(
-        "_arr",
-        F.transform(
-            "_arr",
-            lambda x, i: F.when(i.isin(list(rt.phone_idx)), F.md5(x)).otherwise(x),
-        ),
-    )
-    key = F.concat_ws(
-        ",", F.get(F.col("_arr"), rt.lac_idx), F.get(F.col("_arr"), rt.ci_idx)
-    )
-    joined = masked.withColumn("lookup_key", key).join(
-        F.broadcast(lookup), F.col("lookup_key") == F.col("map_key"), how
-    )
-    flag = F.col("map_value") if how == "inner" else F.coalesce("map_value", F.lit(""))
-    return joined.select(
-        F.array_join("_arr", rt.sep).alias("value"),
-        F.get(F.col("_arr"), rt.start_time_idx).alias("start_time"),
-        flag.alias("flag"),
-        F.lit(rt.tag).alias("tag"),
-    )
-
-
-def _routed_masked(df: DataFrame) -> tuple[DataFrame, str, F.Column, F.Column]:
-    """Shared pre-join stage of the one-pass router: route → conform →
-    mask → derive lookup_key, all as a single projection over literal
-    map columns (rec_type → n_fields / phone-index set / lac / ci).
-    Returns (frame with _arr + lookup_key, sep, start_time col, tag col).
+    Here the schema registry becomes literal map columns (rec_type →
+    n_fields / phone-index set / lac / ci / start / tag), so routing,
+    conforming, masking and key extraction are a single projection over
+    one split of the line — no per-type branch-and-union (the reference
+    re-filtered its cached stream once per type,
+    src/StreamingSocketProcess.scala:138-159), and no re-split per stage
+    (chaining the composable ops splits a 97-field line four times per
+    record). Each record then fans out to every partner (J3) and is
+    enriched against THAT partner's map in a single broadcast join on
+    (partner, lookup_key) — the per-partner maps union into one
+    partner-tagged broadcast, so N partners still cost one scan + one
+    join. Output adds a ``partner`` column for partner-routed sinks (K9).
+    Row-equivalence with the composable chain (route, then per type
+    conform → mask → enrich, union) once per partner is pinned by
+    tests/test_pipeline.py; batch≡stream by tests/test_streaming.py.
     """
     types = sorted(RECORD_TYPES.items())
     m_nf = F.create_map(*[x for p, rt in types for x in (F.lit(p), F.lit(rt.n_fields))])
@@ -154,6 +130,8 @@ def _routed_masked(df: DataFrame) -> tuple[DataFrame, str, F.Column, F.Column]:
     sep = types[0][1].sep  # all six socket types are comma-delimited
     routed = route(df).filter(F.col("rec_type").isin(*[p for p, _ in types]))
     rt_col = F.col("rec_type")
+    # \z (end-of-input), not $: Java $ matches before a final \r, which
+    # would swallow the separator on CRLF-terminated records (lines.py).
     arr = F.split(F.regexp_replace(F.col("value"), f"{sep}+\\z", ""), sep)
     with_arr = routed.withColumn("_arr", arr).filter(
         F.size("_arr") == F.element_at(m_nf, rt_col)
@@ -171,61 +149,8 @@ def _routed_masked(df: DataFrame) -> tuple[DataFrame, str, F.Column, F.Column]:
         F.element_at(F.col("_arr"), F.element_at(m_lac, rt_col) + 1),
         F.element_at(F.col("_arr"), F.element_at(m_ci, rt_col) + 1),
     )
-    start_time = F.element_at(F.col("_arr"), F.element_at(m_st, rt_col) + 1)
-    return masked.withColumn("lookup_key", key), sep, start_time, F.element_at(
-        m_tag, rt_col
-    )
-
-
-def routed_pipeline(df: DataFrame, lookup: DataFrame, how: str = "inner") -> DataFrame:
-    """The whole 6-type graph in ONE pass over the stream.
-
-    The schema registry becomes literal map columns (rec_type →
-    n_fields / phone-index set / lac / ci / start / tag), so routing,
-    conforming, masking, and key extraction are a single projection —
-    one scan, one broadcast join, no per-type branch-and-union (the
-    reference re-filtered its cached stream once per type,
-    src/StreamingSocketProcess.scala:138-159; a naive port unions 6
-    filtered branches = 6 passes per micro-batch).
-    ``routed_pipeline_unioned`` keeps the branch-per-type shape as the
-    equivalence reference; ``routed_pipeline_dual`` is the two-partner
-    form the reference actually deploys.
-    """
-    pre, sep, start_time, tag = _routed_masked(df)
-    joined = pre.join(
-        F.broadcast(lookup), F.col("lookup_key") == F.col("map_key"), how
-    )
-    flag = F.col("map_value") if how == "inner" else F.coalesce("map_value", F.lit(""))
-    return joined.select(
-        F.array_join("_arr", sep).alias("value"),
-        start_time.alias("start_time"),
-        flag.alias("flag"),
-        tag.alias("tag"),
-    )
-
-
-def routed_pipeline_dual(
-    df: DataFrame, lookups: dict[str, DataFrame], how: str = "inner"
-) -> DataFrame:
-    """Per-partner enrichment fan-out — the reference's deployed shape:
-    it loads TWO broadcast maps (yaxin + yiyang,
-    src/StreamingSocketProcess.scala:110-119) and passes both into every
-    per-type writer (src/ProcessSums.scala:334; the intended per-partner
-    ``processTable(record, mapN)`` calls are at :371-372), each partner's
-    enrichment feeding its own sink tree (/yaxin vs /yiyang).
-
-    Here: one pre-join pass (route → conform → mask → key), then each
-    record fans out to every partner (J3) and is enriched against THAT
-    partner's map in a single broadcast join on (partner, lookup_key) —
-    the per-partner maps union into one partner-tagged broadcast, so N
-    partners still cost one scan + one join. Output adds a ``partner``
-    column for partner-routed sinks (K9). Row-equivalence with running
-    ``routed_pipeline`` once per partner is pinned by
-    tests/test_streaming.py (batch and streamed).
-    """
-    pre, sep, start_time, tag = _routed_masked(df)
     partners = sorted(lookups)
-    fan = pre.withColumn(
+    fan = masked.withColumn("lookup_key", key).withColumn(
         "partner", F.explode(F.array(*[F.lit(p) for p in partners]))
     )
     tagged = None
@@ -243,28 +168,11 @@ def routed_pipeline_dual(
     flag = F.col("map_value") if how == "inner" else F.coalesce("map_value", F.lit(""))
     return joined.select(
         F.array_join("_arr", sep).alias("value"),
-        start_time.alias("start_time"),
+        F.element_at(F.col("_arr"), F.element_at(m_st, rt_col) + 1).alias("start_time"),
         flag.alias("flag"),
-        tag.alias("tag"),
+        F.element_at(m_tag, rt_col).alias("tag"),
         "partner",
     )
-
-
-def routed_pipeline_unioned(
-    df: DataFrame, lookup: DataFrame, how: str = "inner"
-) -> DataFrame:
-    """Branch-per-type reference implementation (6 filtered branches +
-    union — the naive port of the reference's per-type fan-out). Kept as
-    the equivalence oracle for routed_pipeline."""
-    routed = route(df)
-    parts = [
-        process_type(routed.filter(F.col("rec_type") == p), rt, lookup, how=how)
-        for p, rt in sorted(RECORD_TYPES.items())
-    ]
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
-    return out
 
 
 def archive_frame(df: DataFrame) -> DataFrame:

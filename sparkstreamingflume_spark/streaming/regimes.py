@@ -2,11 +2,10 @@
 of ``q_scd2_history`` (plans/relational_queries.py), sibling of
 ``streaming/transitions.py``.
 
-The ``applyInPandasWithState`` twin (``stateful.regime_history``) pays
-the Arrow->pandas->Python round-trip per key group per batch — the
-host-speed-bound floor the round-8 soak measured at ~13.5 s per batch
-for 100k groups (meeting the reference's 20 s trigger only on a fast
-box). But the batch query itself is pure window algebra: within-batch
+An ``applyInPandasWithState`` form would pay the Arrow->pandas->Python
+round-trip per key group per batch — a host-speed-bound floor (~13.5 s
+per batch for 100k groups, measured on an earlier soak box). But the
+batch query itself is pure window algebra: within-batch
 regimes are lag + cumulative-sum + a per-(key, regime) aggregate, and
 only the per-key OPEN regime needs cross-batch state. This module
 keeps that state in a parquet index maintained from ``foreachBatch``,
@@ -43,8 +42,8 @@ the ``batch_id < B`` state filter plus keep-2 compaction (see
 SAME predecessor rows, so replayed appends are bit-identical and
 reads collapse them per (key, regime_no) / (key, batch_id). Late
 cross-batch events append to the current regime rather than
-retrofitting — the same inherent incremental divergence the Python
-twin documents.
+retrofitting — the inherent divergence of any incremental form from
+a batch query that sees all events at once.
 
 Scale posture: one window exchange over the batch (lag + cumsum +
 interval aggregate share the key partitioning, the certified batch

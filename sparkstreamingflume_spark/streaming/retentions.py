@@ -3,12 +3,9 @@
 foreachBatch family (``transitions.py``, ``regimes.py``,
 ``funnels.py``).
 
-The ``applyInPandasWithState`` twin (``stateful.retention_progress``)
-carries every user's seen-day array through Arrow->pandas->Python each
-batch; this module keeps the SAME state shape — one parquet row per
-user holding the sorted day array and its cohort — and computes every
-delta natively, preserving the Python twin's headline property: EXACT
-under out-of-order arrival, because a late earlier-day event retracts
+The state is one parquet row per user holding the sorted day array
+and its cohort, and every delta is computed natively. The result is
+EXACT under out-of-order arrival, because a late earlier-day event retracts
 the user's previously emitted rows (-1 at the old cohort coordinates,
 exploded straight from the stored day array) and re-emits them at the
 new cohort. Downstream, ``SUM(delta) GROUP BY cohort_day, offset_days``
@@ -19,9 +16,8 @@ State shape matters at scale — the first cut of this module stored one
 ROW per (user, day), and the soak caught the consequence immediately:
 the per-batch anti-join read the ENTIRE history (11.8M rows after five
 minutes at 150k rows/s), so batch cost grew with stream age. The array
-form keeps per-batch reads bounded by |users| rows (the Python twin's
-own state cardinality); the array is calendar-bounded per user exactly
-like the RocksDB twin's, but lives in parquet instead of executor
+form keeps per-batch reads bounded by |users| rows; the array is
+calendar-bounded per user, and lives in parquet instead of executor
 memory.
 
 Per micro-batch (:func:`retention_update_batch`):

@@ -1,17 +1,14 @@
 """Streaming sessionization — the native-session_window twin of
-``q_sessionize`` / ``q_session_window`` (plans/relational_queries.py).
+``q_session_window`` (plans/relational_queries.py).
 
-This was the last stateful analytics shape without a streaming form
-(round-8 verdict "Missing #2"). Unlike the funnel/SCD2/retention/
-transition twins, no custom ``applyInPandasWithState`` operator is
-needed: Spark's ``session_window`` aggregate is itself the streaming
+Spark's ``session_window`` aggregate is itself the streaming
 sessionizer — the SAME expression the certified batch query
 ``q_session_window`` runs executes under ``readStream`` with a
 watermark, with merge-on-overlap state and watermark eviction handled
-by the engine. (The repo's older ``stateful.sessionize`` remains as
-the custom-state illustration with idle-gap timeouts; THIS is the
-production path — JVM-native, no Python row cost, exactly-once under
-checkpoint replay like any built-in stateful agg.)
+by the engine: JVM-native, no Python row cost, exactly-once under
+checkpoint replay like any built-in stateful agg. This is the only
+streaming sessionizer; ``q_sessionize`` (strict ``>`` gap boundary) is
+batch-only.
 
 Session semantics match ``q_session_window``: a session extends while
 consecutive gaps are < ``gap``; the emitted window end is

@@ -1,12 +1,12 @@
 """Streaming event-transition matrix, zero-Python form — the scalable
 twin of ``q_event_transitions`` (plans/relational_queries.py).
 
-The ``applyInPandasWithState`` twin (``stateful.transition_counts``)
-moves EVERY event through Arrow->pandas->Python, one tiny frame per
-key group — a per-event Python floor that scales with host speed, not
-cluster width (round-8 verdict "What's wrong #2": p50 29.1 s per batch
-at 150k rows/s on the r8 box, missing the reference-mirroring 20 s
-trigger). But the within-batch pairs are expressible natively —
+An ``applyInPandasWithState`` form moves EVERY event through
+Arrow->pandas->Python, one tiny frame per key group — a per-event
+Python floor that scales with host speed, not cluster width (p50
+29.1 s per batch at 150k rows/s, measured on an earlier soak box,
+missing the reference-mirroring 20 s trigger). But the within-batch
+pairs are expressible natively —
 ``lag(event_type) OVER (PARTITION BY user_id ORDER BY ts, event_id)``
 — and only the per-key BOUNDARY row (the last event before a batch
 edge) needs cross-batch state. This module keeps that state in a
@@ -48,8 +48,8 @@ reads take the max-batch_id row per key.
 
 In-order arrival across batches gives exact batch parity; a late
 cross-batch event pairs with the stored last event rather than its
-true predecessor — the same inherent incremental divergence the
-Python twin documents.
+true predecessor — the inherent divergence of any incremental form
+from a batch query that sees all events at once.
 
 Scale posture: state is one fixed-width parquet row per key (after
 compaction), the delta stream is bounded by |keys|x|types|^2 per

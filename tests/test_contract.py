@@ -31,6 +31,27 @@ def test_all_oracles_parse_in_duckdb():
         con.execute("EXPLAIN " + sql)
 
 
+def test_materialize_ctes_leaves_suffix_named_ctes_alone():
+    """``e`` and ``assign`` are hinted; ``base`` and ``passign`` end in
+    those names but are other CTEs and keep their plain definitions."""
+    import duckdb
+
+    from sparkstreamingflume_spark.plans.extension_queries import _materialize_ctes
+
+    sql = (
+        "WITH base AS (SELECT 1 AS x), e AS (SELECT x FROM base), "
+        "passign AS (SELECT x FROM e), assign AS (SELECT x FROM passign) "
+        "SELECT x FROM assign"
+    )
+    out = _materialize_ctes(sql)
+    assert out == (
+        "WITH base AS (SELECT 1 AS x), e AS MATERIALIZED (SELECT x FROM base), "
+        "passign AS (SELECT x FROM e), assign AS MATERIALIZED (SELECT x FROM passign) "
+        "SELECT x FROM assign"
+    )
+    assert duckdb.connect().execute(out).fetchall() == [(1,)]
+
+
 def test_entry_flagship(spark):
     import __spark_entry__ as E
 

@@ -1,7 +1,6 @@
 """Zero-Python foreachBatch funnel twin (streaming/funnels.py) vs the
 batch q_funnel definition — stream≡batch on the full fixture under
-batching, replay, and compaction; single-completion semantics; and
-agreement with the applyInPandasWithState twin.
+batching, replay, and compaction; and single-completion semantics.
 """
 
 from __future__ import annotations
@@ -126,82 +125,3 @@ def test_stream_matches_batch_with_replay_and_compaction(spark, tmp_path):
     assert comp == {
         u for u, f in _batch(spark).items() if f[3] == 3
     }
-
-
-def test_python_twin_agreement_on_completions(spark, tmp_path):
-    """The zero-Python twin's completions equal the
-    applyInPandasWithState twin's closed rows on the same feed."""
-    import json
-
-    from sparkstreamingflume_spark.streaming.stateful import (
-        funnel_progress,
-    )
-
-    ev = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .select("user_id", "ts", "event_id", "event_type")
-        .orderBy(F.col("ts").isNull(), "ts", "event_id")
-        .collect()
-    )
-    rows = [
-        (
-            r.user_id,
-            None if r.ts is None else r.ts.isoformat(sep=" "),
-            r.event_id,
-            r.event_type,
-        )
-        for r in ev
-    ]
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    half = (len(rows) + 1) // 2
-    for i in range(2):
-        (landing / f"p{i}.json").write_text(
-            "\n".join(
-                json.dumps(
-                    {
-                        "user_id": u,
-                        "ts": ts,
-                        "event_id": eid,
-                        "event_type": ty,
-                    }
-                )
-                for u, ts, eid, ty in rows[i * half : (i + 1) * half]
-            )
-            + "\n"
-        )
-    stream = (
-        spark.readStream.schema(STR_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    from sparkstreamingflume_spark.streaming.funnels import attach_funnels
-
-    ix = tmp_path / "ix"
-    q = (
-        attach_funnels(stream, str(ix), str(tmp_path / "ckpt_fb"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = funnel_progress(stream, id_col="event_id")
-    q2 = (
-        out.writeStream.format("memory")
-        .queryName("t_fn_py_vs_fb")
-        .option("checkpointLocation", str(tmp_path / "ckpt_py"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    py = {
-        r.user_id: (r.s1_us, r.s2_us, r.s3_us, r.convert_us)
-        for r in spark.sql(
-            "SELECT * FROM t_fn_py_vs_fb WHERE closed"
-        ).collect()
-    }
-    fb = {
-        r.user_id: (r.s1_us, r.s2_us, r.s3_us, r.convert_us)
-        for r in read_completions(spark, str(ix)).collect()
-    }
-    assert fb == py

@@ -131,81 +131,3 @@ def test_stream_matches_batch_with_replay_and_compaction(spark, tmp_path):
     assert _hist(spark, ix) == _batch_hist(spark)
     compact_index(spark, str(ix))
     assert _hist(spark, ix) == _batch_hist(spark)
-
-
-def test_python_twin_agreement_on_closed_regimes(spark, tmp_path):
-    """The zero-Python twin's closed regimes agree with the
-    applyInPandasWithState twin's on the same two-batch feed (one
-    semantics, two execution strategies). The Python twin emits only
-    CLOSED regimes (emit_open=False default), so compare that set."""
-    import json
-
-    from sparkstreamingflume_spark.streaming.stateful import regime_history
-
-    ev = (
-        spark.read.parquet(f"{SF}/events.parquet")
-        .select("user_id", "ts", "event_id", "event_type")
-        .orderBy(F.col("ts").isNull(), "ts", "event_id")
-        .collect()
-    )
-    rows = [
-        (
-            r.user_id,
-            None if r.ts is None else r.ts.isoformat(sep=" "),
-            r.event_id,
-            r.event_type,
-        )
-        for r in ev
-    ]
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    half = (len(rows) + 1) // 2
-    for i in range(2):
-        (landing / f"p{i}.json").write_text(
-            "\n".join(
-                json.dumps(
-                    {
-                        "user_id": u,
-                        "ts": ts,
-                        "event_id": eid,
-                        "event_type": ty,
-                    }
-                )
-                for u, ts, eid, ty in rows[i * half : (i + 1) * half]
-            )
-            + "\n"
-        )
-    stream = (
-        spark.readStream.schema(STR_SCHEMA)
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    from sparkstreamingflume_spark.streaming.regimes import attach_regimes
-
-    ix = tmp_path / "ix"
-    q = (
-        attach_regimes(stream, str(ix), str(tmp_path / "ckpt_fb"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination(120)
-    out = regime_history(stream, id_col="event_id")
-    q2 = (
-        out.writeStream.format("memory")
-        .queryName("t_rg_py_vs_fb")
-        .option("checkpointLocation", str(tmp_path / "ckpt_py"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    py_closed = {
-        (r.user_id, r.regime_no): (r.event_type, r.n_events, r.valid_from_us, r.valid_to_us)
-        for r in spark.sql(
-            "SELECT * FROM t_rg_py_vs_fb WHERE closed"
-        ).collect()
-    }
-    fb_closed = {
-        k: v for k, v in _hist(spark, ix).items() if v[3] is not None
-    }
-    assert fb_closed == py_closed

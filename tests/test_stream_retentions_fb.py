@@ -1,7 +1,6 @@
 """Zero-Python foreachBatch retention twin (streaming/retentions.py)
-vs the batch q_retention definition — exact under ANY arrival order
-(the Python twin's headline property, preserved natively): shuffled
-feeds, cohort-shift retractions, replay, compaction.
+vs the batch q_retention definition — exact under ANY arrival order:
+shuffled feeds, cohort-shift retractions, replay, compaction.
 """
 
 from __future__ import annotations

@@ -1,12 +1,11 @@
 """Zero-Python foreachBatch transition twin (streaming/transitions.py)
-vs the batch q_event_transitions definition — the same pins as the
-applyInPandasWithState twin (tests/test_stream_transitions.py), plus
-the replay and compaction contracts the parquet-index form adds.
+vs the batch q_event_transitions definition — stream≡batch on the
+full fixture, planted NULL-type / NULL-ts / batch-boundary pins,
+and the replay and compaction contracts of the parquet index.
 """
 
 from __future__ import annotations
 
-import pyarrow.parquet as pq
 from pyspark.sql import functions as F
 
 from sparkstreamingflume_spark.plans import REGISTRY
@@ -144,79 +143,3 @@ def test_stream_matches_batch_with_compaction_and_replay(spark, tmp_path):
     # a second compaction (now folding the replay dupes) preserves it
     compact_index(spark, str(ix))
     assert _matrix(spark, ix) == batch
-
-
-def test_python_twin_agrees(spark, tmp_path):
-    """The zero-Python twin and the applyInPandasWithState twin fold
-    the same in-order feed to the same matrix (one semantics, two
-    execution strategies)."""
-    import json
-
-    from sparkstreamingflume_spark.streaming.stateful import (
-        transition_counts,
-    )
-
-    ev = pq.read_table(f"{SF}/events.parquet")
-    rows = [
-        (
-            r["user_id"],
-            None if r["ts"] is None else r["ts"].isoformat(sep=" "),
-            r["event_id"],
-            r["event_type"],
-        )
-        for r in ev.to_pylist()
-    ]
-    rows.sort(key=lambda r: (r[1] is None, r[1] or "", r[2]))
-    landing = tmp_path / "landing"
-    landing.mkdir()
-    half = (len(rows) + 1) // 2
-    for i in range(2):
-        (landing / f"p{i}.json").write_text(
-            "\n".join(
-                json.dumps(
-                    {
-                        "user_id": u,
-                        "ts": ts,
-                        "event_id": eid,
-                        "event_type": ty,
-                    }
-                )
-                for u, ts, eid, ty in rows[i * half : (i + 1) * half]
-            )
-            + "\n"
-        )
-    stream = (
-        spark.readStream.schema(
-            "user_id LONG, ts STRING, event_id LONG, event_type STRING"
-        )
-        .option("maxFilesPerTrigger", 1)
-        .json(str(landing))
-        .withColumn("ts", F.to_timestamp("ts"))
-    )
-    # zero-Python twin via its attach helper (exercises the streaming
-    # wiring, not just the callback)
-    from sparkstreamingflume_spark.streaming.transitions import (
-        attach_transitions,
-    )
-
-    ix = tmp_path / "ix"
-    q = attach_transitions(
-        stream, str(ix), str(tmp_path / "ckpt_fb")
-    ).trigger(availableNow=True).start()
-    q.awaitTermination(120)
-    # Python twin (id_col now defaults to event_id — the ADVICE fix)
-    out = transition_counts(stream)
-    q2 = (
-        out.writeStream.format("memory")
-        .queryName("t_tr_py_vs_fb")
-        .option("checkpointLocation", str(tmp_path / "ckpt_py"))
-        .trigger(availableNow=True)
-        .start()
-    )
-    q2.awaitTermination(120)
-    py = {}
-    for r in spark.sql("SELECT * FROM t_tr_py_vs_fb").collect():
-        k = (r.type_from, r.type_to)
-        py[k] = py.get(k, 0) + r.delta
-    py = {k: v for k, v in py.items() if v != 0}
-    assert _matrix(spark, ix) == py

@@ -4,7 +4,9 @@ Equivalence: the multiset of records out of the streamed pipeline
 (file-drop source, micro-batched) must equal the batch pipeline applied
 to the same lines — micro-batch boundaries must not change results.
 Checkpoint: restarting with the same checkpoint dir processes only new
-files (W4). Empty input: no output, no crash (A4).
+files (W4). Empty input: no output, no crash (A4). The batch-only
+transform tests (routed_pipeline_dual against the composable chain) run
+in the fast profile, in tests/test_pipeline.py.
 """
 
 from __future__ import annotations
@@ -16,58 +18,30 @@ from collections import Counter
 from pathlib import Path
 
 import pytest
-from pyspark.sql import functions as F
 
-from sparkstreamingflume_spark.schemas import RECORD_TYPES
 from sparkstreamingflume_spark.streaming import pipeline, sinks, sources
+from tests.test_pipeline import (  # noqa: F401 (lookup, lookup2: fixtures)
+    corpus,
+    crlf_corpus,
+    lookup,
+    lookup2,
+    make_line,
+)
 
 # Driver-budget profile (pytest.ini): stream-twin/soak/sweep file —
 # excluded from the default selection, always run by tools/run_shards.sh.
 pytestmark = pytest.mark.slow
 
 
-def make_line(prefix: str, i: int) -> str:
-    rt = RECORD_TYPES[prefix]
-    fields = [f"x{j}" for j in range(rt.n_fields)]
-    fields[0] = prefix + f"rec{i}"
-    fields[rt.start_time_idx] = f"2024-01-0{1 + i % 9} 10:00:0{i % 10}"
-    for p in rt.phone_idx:
-        fields[p] = f"1380000{i:04d}"
-    fields[rt.lac_idx] = f"L{i % 5}"
-    fields[rt.ci_idx] = f"C{i % 3}"
-    return rt.sep.join(fields)
-
-
-def corpus(n_per_type: int = 20) -> list[str]:
-    out = []
-    for prefix in sorted(RECORD_TYPES):
-        out += [make_line(prefix, i) for i in range(n_per_type)]
-    out += [f"60raw{i}" for i in range(5)]  # archive-only prefix
-    out += [f"99junk{i}" for i in range(3)]  # unknown -> dead letter
-    return out
-
-
-@pytest.fixture(scope="module")
-def lookup(spark):
-    # keys cover lac L0..L4 x ci C0..C2 minus a few -> inner join drops some
-    rows = [
-        (f"L{a},C{b}", f"label{a}{b}")
-        for a in range(5)
-        for b in range(3)
-        if not (a == 4 and b == 2)
-    ]
-    return spark.createDataFrame(rows, ["map_key", "map_value"])
-
-
 def batch_result(spark, lines: list[str], lookup) -> Counter:
     df = spark.createDataFrame([(ln,) for ln in lines], ["value"])
-    rows = pipeline.routed_pipeline(df, lookup, how="inner").collect()
+    rows = pipeline.routed_pipeline_dual(df, {"p": lookup}, how="inner").collect()
     return Counter(tuple(r) for r in rows)
 
 
 def drain_to_parquet(spark, landing: str, out: str, ckpt: str, lookup) -> None:
     stream = sources.file_drop(spark, landing, max_files_per_trigger=2)
-    transformed = pipeline.routed_pipeline(stream, lookup, how="inner")
+    transformed = pipeline.routed_pipeline_dual(stream, {"p": lookup}, how="inner")
 
     def sink(batch, batch_id):
         batch.write.mode("append").parquet(out)
@@ -129,33 +103,6 @@ def test_empty_landing_dir_is_noop(spark, tmp_path, lookup):
     assert read_counter(spark, out) == Counter()
 
 
-def test_masking_and_enrichment_content(spark, lookup):
-    """Spot-check one record end to end: phones masked, flag from lookup."""
-    import hashlib
-
-    rt = RECORD_TYPES["61"]
-    line = make_line("61", 1)
-    df = spark.createDataFrame([(line,)], ["value"])
-    row = pipeline.process_type(df, rt, lookup, how="inner").collect()[0]
-    fields = row.value.split(",")
-    raw = line.split(",")
-    for p in rt.phone_idx:
-        assert fields[p] == hashlib.md5(raw[p].encode()).hexdigest()
-    assert row.flag == "label11"  # L1,C1
-    assert row.tag == "2g_call"
-    assert row.start_time == raw[rt.start_time_idx]
-
-
-def test_inner_drops_left_defaults(spark, lookup):
-    """J1 vs J2 semantics on a key missing from the lookup (L4,C2)."""
-    rt = RECORD_TYPES["61"]
-    line = make_line("61", 14)  # i=14 -> L4, C2 (dropped from lookup)
-    df = spark.createDataFrame([(line,)], ["value"])
-    assert pipeline.process_type(df, rt, lookup, how="inner").count() == 0
-    left = pipeline.process_type(df, rt, lookup, how="left").collect()
-    assert len(left) == 1 and left[0].flag == ""
-
-
 def test_socket_source_roundtrip(spark, lookup):
     """S2 — real TCP socket into the routed pipeline (memory sink)."""
     lines = [make_line("61", i) for i in range(8)]
@@ -175,7 +122,7 @@ def test_socket_source_roundtrip(spark, lookup):
     t.start()
 
     stream = sources.socket(spark, "127.0.0.1", port)
-    transformed = pipeline.routed_pipeline(stream, lookup, how="left")
+    transformed = pipeline.routed_pipeline_dual(stream, {"p": lookup}, how="left")
     q = (
         transformed.writeStream.format("memory")
         .queryName("t_socket")
@@ -196,34 +143,6 @@ def test_socket_source_roundtrip(spark, lookup):
         srv.close()
 
 
-def _crlf_corpus() -> list[str]:
-    """Records that arrive with a trailing CR, two of them with an empty
-    last field so the raw line ends ``,\\r`` — the shape that mis-split
-    under the old Java-regex ``$`` trailing-separator strip."""
-    lines = [make_line("61", i) for i in range(8)]
-    for k in (2, 5):
-        fields = lines[k].split(",")
-        fields[-1] = ""
-        lines[k] = ",".join(fields)
-    return [ln + "\r" for ln in lines]
-
-
-def test_batch_pipeline_crlf_records_conform(spark, lookup):
-    """The fused one-pass router (pipeline.py fused split — a separate
-    code path from functions/lines.py) must conform CR-terminated records:
-    Java/Scala split keeps the ``\\r`` as (part of) the last field, so the
-    field count is unchanged and no record is dropped as dirty.
-    Reference: the Flume event body keeps raw CR bytes
-    (src/StreamingSocketProcess.scala:124 reads raw lines)."""
-    cr_lines = _crlf_corpus()
-    df = spark.createDataFrame([(ln,) for ln in cr_lines], ["value"])
-    rows = pipeline.routed_pipeline(df, lookup, how="left").collect()
-    assert len(rows) == len(cr_lines)  # every CRLF record conformed
-    # the ',\r' records: \r occupies the (empty) last field slot
-    ends = sorted(r.value.split(",")[-1] for r in rows)
-    assert ends.count("\r") == 2
-
-
 def test_flume_json_crlf_stream_equals_batch(spark, tmp_path, lookup):
     """CRLF ingestion end-to-end (round-3 verdict task 7). Spark's socket
     and text-file sources strip CRLF at the line reader, so the carrier
@@ -233,7 +152,7 @@ def test_flume_json_crlf_stream_equals_batch(spark, tmp_path, lookup):
     CR-suffixed values."""
     import json
 
-    cr_lines = _crlf_corpus()
+    cr_lines = crlf_corpus()
     landing = tmp_path / "landing"
     landing.mkdir()
     for i in range(2):
@@ -245,7 +164,7 @@ def test_flume_json_crlf_stream_equals_batch(spark, tmp_path, lookup):
     stream = spark.readStream.schema("value STRING").option(
         "maxFilesPerTrigger", 1
     ).json(str(landing))
-    transformed = pipeline.routed_pipeline(stream, lookup, how="left")
+    transformed = pipeline.routed_pipeline_dual(stream, {"p": lookup}, how="left")
     out, ckpt = str(tmp_path / "out"), str(tmp_path / "ckpt")
 
     def sink(batch, batch_id):
@@ -258,7 +177,8 @@ def test_flume_json_crlf_stream_equals_batch(spark, tmp_path, lookup):
 
     df = spark.createDataFrame([(ln,) for ln in cr_lines], ["value"])
     expect = Counter(
-        tuple(r) for r in pipeline.routed_pipeline(df, lookup, how="left").collect()
+        tuple(r)
+        for r in pipeline.routed_pipeline_dual(df, {"p": lookup}, how="left").collect()
     )
     got = read_counter(spark, out)
     assert got == expect
@@ -302,56 +222,6 @@ def test_flume_pipeline_masks_and_partitions(spark, tmp_path):
     for i in (0, 1, 2, 7):
         assert fields[i] == hashlib.md5(f"g{i}".encode()).hexdigest()
     assert fields[3] == "g3"  # unmasked fields intact
-
-
-def test_onepass_router_equals_unioned(spark, lookup):
-    """The one-pass metadata-driven router must produce exactly the
-    branch-per-type union's multiset, for both join modes."""
-    lines = corpus()
-    df = spark.createDataFrame([(ln,) for ln in lines], ["value"])
-    for how in ("inner", "left"):
-        one = Counter(
-            tuple(r) for r in pipeline.routed_pipeline(df, lookup, how=how).collect()
-        )
-        ref = Counter(
-            tuple(r)
-            for r in pipeline.routed_pipeline_unioned(df, lookup, how=how).collect()
-        )
-        assert one == ref, f"one-pass != unioned for how={how}"
-
-
-@pytest.fixture(scope="module")
-def lookup2(spark):
-    # yiyang's map: different coverage + different labels than yaxin's
-    rows = [
-        (f"L{a},C{b}", f"yy{a}{b}")
-        for a in range(5)
-        for b in range(3)
-        if (a + b) % 2 == 0
-    ]
-    return spark.createDataFrame(rows, ["map_key", "map_value"])
-
-
-def test_dual_lookup_equals_per_partner_single(spark, lookup, lookup2):
-    """Reference parity: both broadcast maps ride every pipeline
-    (StreamingSocketProcess.scala:110-119 + ProcessSums.scala:334).
-    The dual pipeline must equal running the single-lookup pipeline once
-    per partner, for inner AND left join modes."""
-    lines = corpus()
-    df = spark.createDataFrame([(ln,) for ln in lines], ["value"])
-    maps = {"yaxin": lookup, "yiyang": lookup2}
-    for how in ("inner", "left"):
-        dual = Counter(
-            tuple(r)
-            for r in pipeline.routed_pipeline_dual(df, maps, how=how).collect()
-        )
-        single = Counter()
-        for partner, lk in maps.items():
-            single.update(
-                tuple(r) + (partner,)
-                for r in pipeline.routed_pipeline(df, lk, how=how).collect()
-            )
-        assert dual == single, how
 
 
 def test_restart_under_load_exactly_once(spark, tmp_path, lookup, lookup2):

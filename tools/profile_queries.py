@@ -1,12 +1,12 @@
-"""Round-13 optimization profiler.
+"""Query profiler.
 
 Times individual registry queries with the noop sink (guide §1.4) after a
 warm-up pass, and optionally dumps `.explain("formatted")` to
-plans/r13/<query>_<tag>.txt (guide §1 "measure first" / §7.2).
+<plans-dir>/<query>_<tag>.txt (guide §1 "measure first" / §7.2).
 
 Usage:
-  python tools/profile_r13.py [--iters N] [--explain TAG] [--sf DIR] q1 q2 ...
-  python tools/profile_r13.py --explain before --all-window   # every cert-window query's plan
+  python tools/profile_queries.py [--iters N] [--explain TAG --plans-dir DIR] [--sf DIR] q1 q2 ...
+  python tools/profile_queries.py --explain before --plans-dir plans/before --all-window   # every cert-window query's plan
 
 Prints one line per query: name, median, all samples. Jobs are labelled
 (setJobDescription) so the SQL tab / event logs map back to queries.
@@ -29,11 +29,14 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="*")
     ap.add_argument("--iters", type=int, default=5)
-    ap.add_argument("--explain", default=None, help="dump plans/r13/<q>_<TAG>.txt")
+    ap.add_argument("--explain", default=None, help="dump <plans-dir>/<q>_<TAG>.txt")
+    ap.add_argument("--plans-dir", default=None, help="directory for --explain dumps")
     ap.add_argument("--sf", default=None)
     ap.add_argument("--all-window", action="store_true")
     ap.add_argument("--no-time", action="store_true", help="explain only, no timing")
     args = ap.parse_args()
+    if args.explain and not args.plans_dir:
+        ap.error("--explain needs --plans-dir")
 
     from sparkstreamingflume_spark.plans import REGISTRY, window_queries
     from sparkstreamingflume_spark.session import DEFAULT_SF_DIR, get_session
@@ -45,7 +48,7 @@ def main() -> None:
             (extra_conf + ";" if extra_conf else "")
             + "spark.cleaner.periodicGC.interval=20s"
         )
-    spark = get_session("profile_r13")
+    spark = get_session("profile")
 
     names = list(args.queries)
     if args.all_window:
@@ -54,9 +57,8 @@ def main() -> None:
     if unknown:
         sys.exit(f"unknown queries: {unknown}")
 
-    plans_dir = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "plans", "r13")
     if args.explain:
-        os.makedirs(plans_dir, exist_ok=True)
+        os.makedirs(args.plans_dir, exist_ok=True)
 
     def run(name: str) -> float:
         spark.sparkContext.setJobDescription(f"profile:{name}")
@@ -64,6 +66,11 @@ def main() -> None:
         REGISTRY[name].build(spark, sf_dir).write.mode("overwrite").format("noop").save()
         dt = time.time() - t0
         spark.sparkContext.setJobDescription(None)
+        # Persist-bearing queries (knn_graph family) register their
+        # cache by CANONICALIZED plan, so sample 2 of an unchanged
+        # query would silently read sample 1's InMemoryRelation and
+        # fake the timing. Every sample must recompute from parquet.
+        spark.catalog.clearCache()
         return dt
 
     # Warm-up pass (JVM/codegen/AQE/file-listing first-touch)
@@ -76,7 +83,7 @@ def main() -> None:
             buf = io.StringIO()
             with redirect_stdout(buf):
                 df.explain("formatted")
-            with open(os.path.join(plans_dir, f"{name}_{args.explain}.txt"), "w") as f:
+            with open(os.path.join(args.plans_dir, f"{name}_{args.explain}.txt"), "w") as f:
                 f.write(buf.getvalue())
         if args.no_time:
             continue

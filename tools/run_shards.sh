@@ -1,8 +1,8 @@
 #!/bin/bash
-# Parallel test-suite runner — round-13 rebalance (round-12 verdict
-# task 7: the old shard 6 held ALL Python-stateful stream twins and
-# dominated at ~23 min of the 23-min wall; they are now split across
-# three shards, targeting max-shard <= ~15 min at the same green count).
+# Parallel test-suite runner: every tests/test_*.py file, in 8 shards.
+# Shards 1-3 hold the zero-Python stream twins (test_stream_*_fb,
+# test_stream_regimes, test_stream_sessions) next to lighter files, so
+# no shard is empty and none of them outlasts the media/kNN shards.
 #
 # Invariants encoded here:
 # * conftest pins local[4], so 8 shards saturate the 32-core box.
@@ -20,9 +20,9 @@ OUT=${SHARD_OUT:-/tmp/shards}
 mkdir -p "$OUT"
 
 declare -A GROUP
-GROUP[1]="test_stateful test_stream_scd2 test_stream_sessions test_approx"
-GROUP[2]="test_stream_funnel test_stream_retention test_stream_transitions test_sketch_search"
-GROUP[3]="test_stream_funnels_fb test_stream_retentions_fb test_stream_transitions_fb test_stream_regimes test_stream_hll test_stream_neardup"
+GROUP[1]="test_stream_sessions test_approx test_stream_funnels_fb test_stream_regimes"
+GROUP[2]="test_sketch_search test_stream_retentions_fb test_stream_transitions_fb"
+GROUP[3]="test_stream_hll test_stream_neardup test_pipeline"
 GROUP[4]="test_stream_knn test_stream_dedup test_stream_join test_state_index"
 GROUP[5]="test_stream_media_neardup test_multimodal"
 GROUP[6]="test_semantic_dedup test_oracle_extras test_index_overlap test_incremental_dedup"

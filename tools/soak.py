@@ -7,9 +7,9 @@ processing where p99 batch duration stays under the trigger interval
 the next arrives, src/StreamingSocketProcess64.scala:83).
 
 Usage: python tools/soak.py [rows_per_second] [seconds] [mode]
-mode = type61 (single-type pipeline, default) | routed (mixed 61-66
-lines through the one-pass metadata-driven router) | dual (routed +
-two-partner fan-out enrichment, routed_pipeline_dual — 2x output rows)
+mode = dual (default: mixed 61-66 lines through the production ingest
+graph, routed_pipeline_dual — one-pass router + two-partner fan-out
+enrichment, 2x output rows)
 | sjoin_inner / sjoin_outer (stream-stream interval join: two rate
 sources at rows_per_second EACH, keyed user join with a 30 s interval
 and 30 s watermarks — state must stay bounded at ~rate x horizon)
@@ -57,7 +57,7 @@ sys.path.insert(0, ".")
 def main() -> None:
     rows_per_sec = int(sys.argv[1]) if len(sys.argv) > 1 else 200_000
     run_s = int(sys.argv[2]) if len(sys.argv) > 2 else 30
-    mode = sys.argv[3] if len(sys.argv) > 3 else "type61"
+    mode = sys.argv[3] if len(sys.argv) > 3 else "dual"
     # stream-stream joins pay a fixed per-batch state-store cost (RocksDB
     # commit every batch + a periodic ~11 s snapshot-maintenance spike
     # every ~60 s, measured in SOAK_DEBUG traces); a longer trigger
@@ -67,26 +67,14 @@ def main() -> None:
     # neardup's per-batch floor is parquet index reads + two writes +
     # checkpoint commits (~4.7 s at ANY batch size, measured) — a 10 s
     # trigger amortizes it; throughput is rows/s, not batches/s
-    # scd2 runs applyInPandasWithState (Arrow + Python fold per batch):
-    # the per-batch floor is the Python worker round-trip, so the 10 s
-    # trigger amortizes it like neardup's parquet floor
     trigger_s = {
         "sjoin_inner": 20,
         "sjoin_outer": 20,
         "neardup": 10,
         "neardup_compact": 10,
-        # measured: the scd2 batch floor is ~13 s for 100k ACTIVE GROUPS
-        # regardless of row count (Arrow+Python round-trip per group set
-        # + RocksDB commit) — 20 s absorbs it, same bar as the joins
-        "scd2": 20,
-        # same Python-stateful floor (applyInPandasWithState over 100k
-        # groups); retention additionally grows an array-state column
-        "retention": 20,
-        "transitions": 20,
         # the zero-Python twins' floor is index reads + two parquet
         # writes + checkpoint commit (neardup's weight class) — they get
-        # the REFERENCE bar (20 s) that the Python twins cannot meet on
-        # the r8-class box, which is the round-9 claim under test
+        # the REFERENCE bar (20 s)
         "transitions_fb": 20,
         "scd2_fb": 20,
         "funnel_fb": 20,
@@ -117,9 +105,8 @@ def main() -> None:
         # same index-read floor class as knn/neardup
         "media": 20,
     }.get(mode, 2)
-    # box-speed compensation without editing the mode table: the
-    # Python-stateful floor scales with host speed (the round-8 box runs
-    # ~1.6x the round-7 box, pushing the 100k-group floor past 20 s)
+    # box-speed compensation without editing the mode table: per-batch
+    # floors scale with host speed
     trigger_s = int(os.environ.get("SOAK_TRIGGER_S", trigger_s))
 
     from pyspark.sql import functions as F
@@ -165,16 +152,6 @@ def main() -> None:
     spark = get_session("soak")
 
     rate = sources.rate(spark, rows_per_second=rows_per_sec)
-
-    def make_line(prefix: str) -> F.Column:
-        rt = RECORD_TYPES[prefix]
-        filler = ",".join(f"f{j}" for j in range(2, rt.n_fields))
-        return F.concat_ws(
-            ",",
-            F.concat(F.lit(prefix + "rec"), F.col("value")),
-            F.date_format("timestamp", "yyyy-MM-dd HH:mm:ss"),
-            F.lit(filler),
-        )
 
     lookup = spark.createDataFrame(
         [
@@ -316,75 +293,9 @@ def main() -> None:
             .start()
         )
         transformed = None
-    elif mode == "scd2":
-        # 100k keys, each key's event_type flipping every |users| rows:
-        # at 50k rows/s a key sees an event every ~2 s and changes type
-        # every ~6 s, so regimes close continuously — state stays ONE
-        # fixed-width row per key (plateau check), output is the closed-
-        # regime stream. First soak row for a Python-stateful operator.
-        from sparkstreamingflume_spark.streaming.stateful import regime_history
-
-        n_users = 100_000
-        # key u's k-th event has value = u + k*n_users, so
-        # (value div (3*n_users)) increments every 3rd key-event: the
-        # type flips every 3 events per key — regimes EXTEND twice then
-        # close, exercising both state paths (a per-event flip would
-        # never hit the extend branch and close 3x the regimes)
-        events = rate.select(
-            (F.col("value") % n_users).alias("user_id"),
-            F.col("timestamp").alias("ts"),
-            F.col("value").alias("event_id"),
-            F.element_at(
-                F.array(F.lit("view"), F.lit("click"), F.lit("purchase")),
-                (F.expr(f"(value div {3 * n_users}) % 3") + 1).cast("int"),
-            ).alias("event_type"),
-        )
-        transformed = regime_history(events, id_col="event_id", timeout_s=3600)
-    elif mode == "retention":
-        # 100k keys; each key's EVENT-TIME day advances every 3rd
-        # key-event, so 2/3 of events revisit the current day (state
-        # probe, no delta) and 1/3 open a new one (one +1 delta) —
-        # seen_days grows ~1 entry per 3 key-events, the calendar-
-        # bounded array-state shape stressed far beyond real cadence
-        # (a year of days per key in ~15 min at 150k rows/s)
-        from sparkstreamingflume_spark.streaming.stateful import (
-            retention_progress,
-        )
-
-        n_users = 100_000
-        day = F.expr(f"value div {3 * n_users}").cast("long")
-        events = rate.select(
-            (F.col("value") % n_users).alias("user_id"),
-            F.timestamp_seconds(
-                F.lit(1_704_067_200)  # 2024-01-01 UTC
-                + day * 86_400
-                + (F.col("value") % n_users) % 3_600
-            ).alias("ts"),
-        )
-        transformed = retention_progress(events)
-    elif mode == "transitions":
-        # the scd2 generator (type flips every 3rd key-event) through
-        # the transition tracker: fixed-width state per key, per-batch
-        # presummed (user, from, to) delta rows
-        from sparkstreamingflume_spark.streaming.stateful import (
-            transition_counts,
-        )
-
-        n_users = 100_000
-        events = rate.select(
-            (F.col("value") % n_users).alias("user_id"),
-            F.col("timestamp").alias("ts"),
-            F.col("value").alias("event_id"),
-            F.element_at(
-                F.array(F.lit("view"), F.lit("click"), F.lit("purchase")),
-                (F.expr(f"(value div {3 * n_users}) % 3") + 1).cast("int"),
-            ).alias("event_type"),
-        )
-        transformed = transition_counts(
-            events, id_col="event_id", timeout_s=3600
-        )
     elif mode == "scd2_fb":
-        # the scd2 generator through the zero-Python regime twin
+        # 100k keys whose event_type flips every 3rd key-event (regimes
+        # extend twice, then close) through the zero-Python regime twin
         # (streaming/regimes.py): within-batch regimes via the native
         # lag+cumsum plan, boundary stitch via the parquet open index —
         # the round-9 companion claim to transitions_fb
@@ -494,11 +405,11 @@ def main() -> None:
         )
         transformed = None
     elif mode == "retention_fb":
-        # the retention generator (event-time day advances every 3rd
-        # key-event) through the zero-Python retention twin
+        # 100k keys whose event-time day advances every 3rd key-event
+        # through the zero-Python retention twin
         # (streaming/retentions.py): 2/3 of rows dedup away in the
         # anti-join, 1/3 emit a delta; the seen index grows one row per
-        # (key, day) — the Python twin's array state, now on disk
+        # (key, day)
         import tempfile
 
         from sparkstreamingflume_spark.streaming import retentions as RT
@@ -552,7 +463,8 @@ def main() -> None:
         )
         transformed = None
     elif mode == "transitions_fb":
-        # the SAME generator through the zero-Python foreachBatch twin
+        # the scd2_fb generator (type flips every 3rd key-event) through
+        # the zero-Python foreachBatch twin
         # (streaming/transitions.py): within-batch pairs via native lag,
         # cross-batch boundary via the parquet last-event index —
         # measures the round-9 claim that dropping the Python row path
@@ -1168,11 +1080,11 @@ def main() -> None:
             .start()
         )
         transformed = None
-    elif mode in ("routed", "dual"):
+    elif mode == "dual":
         # round-robin over all six record types through the one-pass
         # router; pick prefix+filler via element_at FIRST so only one
-        # line is materialized per row (array(make_line x6) would build
-        # all six ~500-char strings per row — generator-bound soak)
+        # line is materialized per row (an array of all six lines would
+        # build six ~500-char strings per row — generator-bound soak)
         prefixes = sorted(RECORD_TYPES)
         idx = (F.col("value") % len(prefixes) + 1).cast("int")
         pfx = F.element_at(F.array(*[F.lit(p) for p in prefixes]), idx)
@@ -1196,17 +1108,11 @@ def main() -> None:
             filler,
         )
         lines = rate.select(line.alias("value"))
-        if mode == "dual":
-            transformed = pipeline.routed_pipeline_dual(
-                lines, {"yaxin": lookup, "yiyang": lookup}, how="left"
-            )
-        else:
-            transformed = pipeline.routed_pipeline(lines, lookup, how="left")
-    else:
-        lines = rate.select(make_line("61").alias("value"))
-        transformed = pipeline.process_type(
-            lines, RECORD_TYPES["61"], lookup, how="left"
+        transformed = pipeline.routed_pipeline_dual(
+            lines, {"yaxin": lookup, "yiyang": lookup}, how="left"
         )
+    else:
+        raise SystemExit(f"unknown soak mode: {mode}")
 
     if transformed is not None:
         q = (
