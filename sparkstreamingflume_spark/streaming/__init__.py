@@ -17,6 +17,10 @@ zero-Python foreachBatch twins of q_event_transitions / q_scd2_history
 cross-batch boundaries through parquet state indexes (keep-2
 compaction, replay-exact; retention exact under ANY arrival order via
 retraction deltas).
+``state`` — the parquet state-index protocols the foreachBatch twins
+share: recover/swap, live-or-old reads, keep-N and first-batch
+compaction, the list-first fold, and ``attach`` (the one stream
+wiring).
 ``sessions`` — native session_window sessionization under readStream +
 watermark (the streaming twin of q_session_window).
 """

@@ -189,19 +189,6 @@ def funnel_update_batch(
     j.unpersist()
 
 
-def attach_funnels(
-    stream: DataFrame, index_dir: str, checkpoint_dir: str, **kw
-):
-    """Wire a streaming event frame through the funnel index sink."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: funnel_update_batch(b, i, index_dir, **kw)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def read_funnels(spark: SparkSession, index_dir: str) -> DataFrame:
     """The live funnel table — q_funnel's exact output columns
     (user_id, s1_us, s2_us, s3_us, stage_reached, convert_us) from the

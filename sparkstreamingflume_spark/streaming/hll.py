@@ -84,17 +84,6 @@ def hll_update_batch(batch: DataFrame, batch_id: int, index_dir: str) -> None:
     )
 
 
-def attach_hll(stream: DataFrame, index_dir: str, checkpoint_dir: str):
-    """Wire a streaming event frame through the register sink."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: hll_update_batch(b, i, index_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def read_registers(spark: SparkSession, index_dir: str) -> DataFrame:
     """The folded registers: (event_type, bucket, r) max-merged over
     base + deltas. Duplicate delta rows from replays collapse through

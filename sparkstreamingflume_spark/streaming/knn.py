@@ -99,6 +99,8 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkstreamingflume_spark.streaming.state import (
+    first_batch_compact,
+    first_batch_rows,
     read_state,
     recover_index,
     swap_in,
@@ -330,19 +332,6 @@ def knn_update_batch(
     probes.unpersist()
 
 
-def attach_knn(
-    stream: DataFrame, index_dir: str, checkpoint_dir: str, **kw
-):
-    """Wire a streaming embedding frame through the graph index sink."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: knn_update_batch(b, i, index_dir, **kw)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def read_edges(spark: SparkSession, index_dir: str) -> DataFrame:
     """The live graph in ``KNN_GRAPH_SCHEMA`` column order — replay
     duplicates collapsed (deterministic appends are bit-identical).
@@ -367,24 +356,9 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
         ("members", MEMBERS_SCHEMA, ["vec_id"]),
         ("edges", EDGES_SCHEMA, ["q_id", "nbr_id"]),
     ):
-        recover_index(spark, index_dir, name)
-        live = read_state(spark, index_dir, name, schema)
-        n_before = live.count()
-        if n_before == 0:
-            continue
-        others = [c for c in live.columns if c not in keys]
-        compacted = live.groupBy(*keys).agg(
-            *[
-                (
-                    F.min(c) if c == "batch_id" else F.first(c)
-                ).alias(c)
-                for c in others
-            ]
-        )
-        stats[name] = (
-            n_before,
-            write_swap(spark, compacted, index_dir, name),
-        )
+        st = first_batch_compact(spark, index_dir, name, schema, keys)
+        if st is not None:
+            stats[name] = st
     return stats
 
 
@@ -497,13 +471,7 @@ def prepare_rebootstrap(
     members = read_state(spark, index_dir, "members", MEMBERS_SCHEMA)
     # collapse replay duplicates exactly as compact_index would (MIN
     # batch_id per vec_id) so the rebuilt index is compact too
-    others = [c for c in members.columns if c != "vec_id"]
-    collapsed = members.groupBy("vec_id").agg(
-        *[
-            (F.min(c) if c == "batch_id" else F.first(c)).alias(c)
-            for c in others
-        ]
-    )
+    collapsed = first_batch_rows(members, ["vec_id"])
     snap = f"{index_dir}/.geom_snap"
     collapsed.write.mode("overwrite").parquet(snap)
     snap_df = spark.read.schema(MEMBERS_SCHEMA).parquet(snap)

@@ -80,6 +80,7 @@ from pyspark.sql import functions as F
 
 from sparkstreamingflume_spark.streaming.state import (
     _hadoop_fs,
+    first_batch_compact,
     read_state,
     recover_index,
     swap_in,
@@ -548,24 +549,6 @@ def media_neardup_batch(
     occ.unpersist()
 
 
-def attach_media_neardup(
-    stream: DataFrame,
-    index_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    **kw,
-):
-    """Wire a streaming (media_id, payload) frame through the media
-    near-dup sink."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: media_neardup_batch(b, i, index_dir, out_dir, **kw)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def read_pairs(spark: SparkSession, out_dir: str) -> DataFrame:
     """The emitted pair history (bootstrap's seed pairs at
     batch_id=-1 plus every batch's), replay duplicates collapsed."""
@@ -588,26 +571,9 @@ def compact_media_index(spark: SparkSession, index_dir: str) -> dict:
         ("sigs", SIGS_SCHEMA, ["media_id", "band"]),
         ("hists", HISTS_SCHEMA, ["media_id", "bucket"]),
     ):
-        recover_index(spark, index_dir, name)
-        fs, _ = _hadoop_fs(spark, index_dir)
-        path = f"{index_dir}/{name}"
-        if not fs.exists(spark._jvm.org.apache.hadoop.fs.Path(path)):
-            continue
-        live = read_state(spark, index_dir, name, schema)
-        n_before = live.count()
-        if n_before == 0:
-            continue
-        others = [c for c in live.columns if c not in keys]
-        compacted = live.groupBy(*keys).agg(
-            *[
-                (F.min(c) if c == "batch_id" else F.first(c)).alias(c)
-                for c in others
-            ]
-        )
-        stats[name] = (
-            n_before,
-            write_swap(spark, compacted, index_dir, name),
-        )
+        st = first_batch_compact(spark, index_dir, name, schema, keys)
+        if st is not None:
+            stats[name] = st
     return stats
 
 

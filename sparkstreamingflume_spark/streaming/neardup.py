@@ -46,16 +46,9 @@ from pyspark.sql import functions as F
 
 from sparkstreamingflume_spark.functions.text import minhash_bands, tokens
 
-# the index plumbing moved to streaming/state.py (round-10 hygiene:
-# one implementation of recover/swap/fold for the whole foreachBatch
-# family); re-exported here because every earlier streaming twin
-# imports these two from this module
-from sparkstreamingflume_spark.streaming.state import (  # noqa: F401
-    _hadoop_fs,
-    _read_index,
+from sparkstreamingflume_spark.streaming.state import (
+    first_batch_compact,
     read_state,
-    recover_index,
-    write_swap,
 )
 
 EXACT_SCHEMA = "sig string, batch_id long"
@@ -172,26 +165,6 @@ def incremental_dedup_batch(
         survivors.unpersist()
 
 
-def attach_incremental_dedup(
-    stream: DataFrame,
-    index_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    id_col: str = "doc_id",
-    text_col: str = "text",
-):
-    """Wire a streaming doc frame through the incremental-dedup sink."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: incremental_dedup_batch(
-                b, i, index_dir, out_dir, id_col=id_col, text_col=text_col
-            )
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def compact_index(spark: SparkSession, index_dir: str) -> dict:
     """Rewrite both signature indexes to one row per distinct key.
 
@@ -205,32 +178,17 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     break it: a key first indexed by batch 2 and re-appended by a
     replayed batch 5 would vanish from batch 5's own probe view.)
 
-    Runs as one combinable min-aggregation per index, through the
-    shared recover/tmp+rename swap of ``streaming/state.py`` (see its
-    module doc for the crash protocol, the FS-agnosticism, and the
-    atomic-rename caveat on raw object stores).
+    Runs :func:`streaming.state.first_batch_compact` per index (see
+    the ``streaming/state.py`` module doc for the crash protocol, the
+    FS-agnosticism, and the atomic-rename caveat on raw object stores).
     Returns per-index (rows_before, rows_after).
     """
     stats = {}
-    for sub, key_cols in (("exact", ["sig"]), ("bands", ["b", "band_hash"])):
-        recover_index(spark, index_dir, sub)
-        fs, _ = _hadoop_fs(spark, index_dir)
-        path = f"{index_dir}/{sub}"
-        if not fs.exists(spark._jvm.org.apache.hadoop.fs.Path(path)):
-            continue
-        before = spark.read.parquet(path)
-        n_before = before.count()
-        compacted = before.groupBy(*key_cols).agg(
-            F.min("batch_id").alias("batch_id")
-        )
-        # size the rewrite to the KEY count (~64 B/key -> ~128 MB files)
-        # instead of inheriting shuffle-partition fan-out: a compaction
-        # that leaves one small file per shuffle partition defeats its
-        # own purpose. repartition (not coalesce) keeps the aggregation
-        # parallel and only narrows the final write.
-        target_files = max(1, -(-n_before * 64 // (128 << 20)))
-        n_after = write_swap(
-            spark, compacted, index_dir, sub, n_files=target_files
-        )
-        stats[sub] = (n_before, n_after)
+    for name, schema, keys in (
+        ("exact", EXACT_SCHEMA, ["sig"]),
+        ("bands", BANDS_SCHEMA, ["b", "band_hash"]),
+    ):
+        st = first_batch_compact(spark, index_dir, name, schema, keys)
+        if st is not None:
+            stats[name] = st
     return stats

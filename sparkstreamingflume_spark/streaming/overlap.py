@@ -44,6 +44,7 @@ from sparkstreamingflume_spark.functions.text import (
 from sparkstreamingflume_spark.streaming.state import (
     _hadoop_fs,
     _read_index,
+    recover_index,
 )
 
 SIG_SCHEMA = "source string, j int, sig long, batch_id long"
@@ -86,17 +87,6 @@ def overlap_update_batch(
         .withColumn("batch_id", F.lit(batch_id))
         .write.mode("append")
         .parquet(f"{index_dir}/sig")
-    )
-
-
-def attach_overlap(stream: DataFrame, index_dir: str, checkpoint_dir: str):
-    """Wire a streaming doc frame through the signature sink."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: overlap_update_batch(b, i, index_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
     )
 
 
@@ -149,20 +139,13 @@ def compact_signatures(spark: SparkSession, index_dir: str) -> dict:
     Same list-first protocol as :func:`streaming.hll.compact_registers`.
     Returns {rows_before, rows_after, n_files} or {} when there is
     nothing to fold."""
-    fs, jroot = _hadoop_fs(spark, index_dir)
+    # sweeps a leaked .sig_compact_tmp and recovers the legacy
+    # whole-dir swap's .sig_old (pre-list-first folds only)
+    recover_index(spark, index_dir, "sig")
+    fs, _ = _hadoop_fs(spark, index_dir)
     jvm_path = spark._jvm.org.apache.hadoop.fs.Path
     path = f"{index_dir}/sig"
-    jp, jold = jvm_path(path), jvm_path(f"{index_dir}/.sig_old")
-    if fs.exists(jroot):
-        for st in fs.listStatus(jroot):
-            if st.getPath().getName().startswith(".sig_compact_"):
-                fs.delete(st.getPath(), True)
-    # recover the legacy whole-dir swap (pre-list-first folds only)
-    if fs.exists(jold):
-        if fs.exists(jp):
-            fs.delete(jold, True)
-        else:
-            fs.rename(jold, jp)
+    jp = jvm_path(path)
     if not fs.exists(jp):
         return {}
     files = [

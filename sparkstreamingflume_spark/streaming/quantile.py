@@ -107,17 +107,6 @@ def hdr_update_batch(batch: DataFrame, batch_id: int, index_dir: str) -> None:
     )
 
 
-def attach_hdr(stream: DataFrame, index_dir: str, checkpoint_dir: str):
-    """Wire a streaming event frame through the register sink."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: hdr_update_batch(b, i, index_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def read_registers(
     spark: SparkSession, index_dir: str, dated_only: bool = False
 ) -> DataFrame:

@@ -216,19 +216,6 @@ def regime_update_batch(
     ev.unpersist()
 
 
-def attach_regimes(
-    stream: DataFrame, index_dir: str, checkpoint_dir: str, **cols
-):
-    """Wire a streaming event frame through the regime index sink."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: regime_update_batch(b, i, index_dir, **cols)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def read_history(spark: SparkSession, index_dir: str) -> DataFrame:
     """The live SCD2 history: replay-collapsed closed regimes plus the
     newest open regime per key (valid_to_us NULL) — bit-equal to

@@ -191,19 +191,6 @@ def retention_update_batch(
     j.unpersist()
 
 
-def attach_retention(
-    stream: DataFrame, index_dir: str, checkpoint_dir: str, **cols
-):
-    """Wire a streaming event frame through the retention index sink."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: retention_update_batch(b, i, index_dir, **cols)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def read_triangle(spark: SparkSession, index_dir: str) -> DataFrame:
     """The live retention triangle (cohort_day, offset_days, n_active)
     — the folded base plus fresh deltas; bit-equal to ``q_retention``

@@ -97,17 +97,6 @@ def cms_update_batch(
     )
 
 
-def attach_cms(stream: DataFrame, index_dir: str, checkpoint_dir: str):
-    """Wire a streaming doc frame through the sketch sink."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: cms_update_batch(b, i, index_dir)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def read_sketch(spark: SparkSession, index_dir: str) -> DataFrame:
     """The merged sketch: (d, bucket, cnt) summed over base + fresh
     deltas. Everything stays distributed — the watermark is applied via

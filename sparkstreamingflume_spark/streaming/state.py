@@ -1,9 +1,10 @@
 """Shared parquet state-index plumbing for the foreachBatch family.
 
 Every streaming twin that persists state as plain parquet dirs uses the
-same three protocols; round 9 shipped them re-implemented per module
+same protocols; round 9 shipped them re-implemented per module
 (transitions/regimes/funnels/retentions keep-N state, quantile/sketch
-watermark folds, the HLL max-merge fold) — the round-9 verdict's
+watermark folds, the HLL max-merge fold, and one ``attach_*`` wiring
+plus one min-batch compaction per module) — the round-9 verdict's
 hygiene item. This module is now the ONE implementation:
 
 * **recover / tmp+rename swap** (:func:`recover_index`,
@@ -34,6 +35,16 @@ hygiene item. This module is now the ONE implementation:
   the last uncommitted batch, whose predecessor row is always in the
   top 2), swap the rewrite in.
 
+* **first-batch compaction** (:func:`first_batch_compact`): the
+  append-only indexes (neardup, knn, media) keep ONE row per key with
+  the MIN ``batch_id`` — the first batch that appended it — and
+  ``first()`` of every other column (replays append bit-identical
+  rows, so any one is the row). Min, not max: a replayed batch N
+  probes ``batch_id < N`` and must never see its own append, while a
+  key first indexed by batch 2 and re-appended by a replayed batch 5
+  must stay visible to batch 5. :func:`first_batch_rows` is the
+  collapse alone, for callers that snapshot rather than swap.
+
 * **list-first delta→base fold** (:func:`list_first_fold`): fold
   exactly the LISTED delta part-files, derive the new watermark from
   the listed files' max ``batch_id``, swap base in, then delete
@@ -41,6 +52,10 @@ hygiene item. This module is now the ONE implementation:
   deleted unfolded nor covered by a too-high watermark. With
   ``use_wm=False`` (idempotent merges like HLL max) the same listing
   discipline applies without watermark bookkeeping.
+
+* **stream wiring** (:func:`attach`): every twin's
+  ``update_batch(batch, batch_id, index_dir, **kw)`` callback is wired
+  into a query the same way — ``foreachBatch`` + checkpoint + append.
 
 All directory manipulation goes through the Hadoop FileSystem API
 resolved from the index path's own scheme, so the index can live on
@@ -219,6 +234,66 @@ def keepn_compact(
     )
     out[f"{name}_after"] = write_swap(spark, folded, index_dir, name)
     return out
+
+
+def first_batch_rows(df: DataFrame, keys: Sequence[str]) -> DataFrame:
+    """One row per ``keys``: MIN ``batch_id``, ``first()`` of the rest
+    (see module doc for why min)."""
+    others = [c for c in df.columns if c not in keys]
+    return df.groupBy(*keys).agg(
+        *[
+            (F.min(c) if c == "batch_id" else F.first(c)).alias(c)
+            for c in others
+        ]
+    )
+
+
+def first_batch_compact(
+    spark: SparkSession,
+    index_dir: str,
+    name: str,
+    schema: str,
+    keys: Sequence[str],
+) -> tuple[int, int] | None:
+    """Recover, then rewrite ``<index_dir>/<name>`` to
+    :func:`first_batch_rows` through the swap. Returns
+    ``(rows_before, rows_after)``, or None for an absent or empty
+    index."""
+    recover_index(spark, index_dir, name)
+    live = read_state(spark, index_dir, name, schema)
+    n_before = live.count()
+    if n_before == 0:
+        return None
+    # size the rewrite to the KEY count (~64 B/key -> ~128 MB files)
+    # instead of inheriting shuffle-partition fan-out: a compaction
+    # that leaves one small file per shuffle partition defeats its
+    # own purpose. repartition (not coalesce) keeps the aggregation
+    # parallel and only narrows the final write.
+    n_files = max(1, -(-n_before * 64 // (128 << 20)))
+    n_after = write_swap(
+        spark, first_batch_rows(live, keys), index_dir, name, n_files=n_files
+    )
+    return n_before, n_after
+
+
+def attach(
+    update_batch: Callable[..., None],
+    stream: DataFrame,
+    index_dir: str,
+    checkpoint_dir: str,
+    **kw,
+):
+    """Wire ``stream`` through ``update_batch(batch, batch_id,
+    index_dir, **kw)`` as a checkpointed append-mode foreachBatch sink.
+    Returns the unstarted ``DataStreamWriter`` (callers set the
+    trigger)."""
+    return (
+        stream.writeStream.foreachBatch(
+            lambda b, i: update_batch(b, i, index_dir, **kw)
+        )
+        .option("checkpointLocation", checkpoint_dir)
+        .outputMode("append")
+    )
 
 
 def list_first_fold(

@@ -174,19 +174,6 @@ def transition_update_batch(
     ev.unpersist()
 
 
-def attach_transitions(
-    stream: DataFrame, index_dir: str, checkpoint_dir: str, **cols
-):
-    """Wire a streaming event frame through the transition index sink."""
-    return (
-        stream.writeStream.foreachBatch(
-            lambda b, i: transition_update_batch(b, i, index_dir, **cols)
-        )
-        .option("checkpointLocation", checkpoint_dir)
-        .outputMode("append")
-    )
-
-
 def _fresh_deltas(spark: SparkSession, index_dir: str) -> DataFrame:
     """Delta rows newer than the fold watermark, replay-collapsed per
     (batch, key, pair) by max (deterministic increments, duplicates

@@ -10,11 +10,14 @@ surfaces as four flaky stream suites.
 
 from __future__ import annotations
 
+import json
 import os
 
 from pyspark.sql import functions as F
 
 from sparkstreamingflume_spark.streaming.state import (
+    attach,
+    first_batch_compact,
     keepn_compact,
     list_first_fold,
     read_state,
@@ -131,3 +134,64 @@ def test_list_first_fold_watermark_and_replay(spark, tmp_path):
     )
     # nothing at all to fold
     assert list_first_fold(spark, ix, **kw) == {}
+
+
+def test_first_batch_compact_keeps_min_batch_per_key(spark, tmp_path):
+    ix = str(tmp_path / "ix")
+    sch = "k string, batch_id long, v string"
+    rows = [
+        ("a", 2, "x"), ("a", 0, "x"), ("a", 1, "x"),  # min batch_id wins
+        ("b", 1, "y"), ("b", 1, "y"),                 # bit-identical replay
+    ]
+    _mk(spark, rows, sch).write.parquet(f"{ix}/s")
+    assert first_batch_compact(spark, ix, "s", sch, ["k"]) == (5, 2)
+    got = {tuple(r) for r in read_state(spark, ix, "s", sch).collect()}
+    assert got == {("a", 0, "x"), ("b", 1, "y")}
+    assert len([f for f in os.listdir(f"{ix}/s") if f.endswith(".parquet")]) == 1
+    # absent and empty indexes are skipped, not swapped
+    assert first_batch_compact(spark, ix, "absent", sch, ["k"]) is None
+    _mk(spark, [], sch).write.parquet(f"{ix}/empty")
+    assert first_batch_compact(spark, ix, "empty", sch, ["k"]) is None
+
+
+def test_first_batch_compact_recovers_crashed_swap_first(spark, tmp_path):
+    ix = str(tmp_path / "ix")
+    sch = "k string, batch_id long, v string"
+    _mk(spark, [("a", 3, "x"), ("a", 1, "x")], sch).write.parquet(f"{ix}/s")
+    # crash mid-swap: only .s_old holds the index
+    os.rename(f"{ix}/s", f"{ix}/.s_old")
+    assert first_batch_compact(spark, ix, "s", sch, ["k"]) == (2, 1)
+    assert not os.path.exists(f"{ix}/.s_old")
+    assert [tuple(r) for r in read_state(spark, ix, "s", sch).collect()] == [
+        ("a", 1, "x")
+    ]
+
+
+def test_attach_calls_update_once_per_batch(spark, tmp_path):
+    src, ix, ckpt = tmp_path / "src", str(tmp_path / "ix"), str(tmp_path / "ckpt")
+    os.makedirs(src)
+    for n in range(2):
+        (src / f"{n}.json").write_text(json.dumps({"k": f"k{n}"}) + "\n")
+    calls = []
+
+    def update(batch, batch_id, index_dir, **kw):
+        calls.append((batch_id, index_dir, kw, batch.count()))
+
+    def run():
+        stream = (
+            spark.readStream.schema("k string")
+            .option("maxFilesPerTrigger", 1)
+            .json(str(src))
+        )
+        q = attach(update, stream, ix, ckpt, tag="t")
+        q = q.trigger(availableNow=True).start()
+        try:
+            assert q.awaitTermination(120)
+        finally:
+            q.stop()
+
+    run()
+    assert calls == [(0, ix, {"tag": "t"}, 1), (1, ix, {"tag": "t"}, 1)]
+    # restart on the same checkpoint, no new files: nothing re-runs
+    run()
+    assert len(calls) == 2

@@ -172,9 +172,10 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
     import os
 
     from sparkstreamingflume_spark.streaming.hll import (
-        attach_hll,
         distinct_estimates,
+        hll_update_batch,
     )
+    from sparkstreamingflume_spark.streaming.state import attach
 
     src = tmp_path / "src"
     os.makedirs(src)
@@ -194,8 +195,8 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
     stream = spark.readStream.schema(
         "event_id long, ts timestamp, user_id long, event_type string"
     ).json(str(src))
-    q = attach_hll(
-        stream, str(tmp_path / "ix"), str(tmp_path / "ckpt")
+    q = attach(
+        hll_update_batch, stream, str(tmp_path / "ix"), str(tmp_path / "ckpt")
     ).start()
     try:
         q.processAllAvailable()

@@ -214,9 +214,10 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
     import json
 
     from sparkstreamingflume_spark.streaming.knn import (
-        attach_knn,
         bootstrap_knn_index,
+        knn_update_batch,
     )
+    from sparkstreamingflume_spark.streaming.state import attach
 
     vecs = _vectors()
     ids = sorted(vecs)
@@ -236,8 +237,8 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
     stream = spark.readStream.schema(
         "vec_id long, embedding array<double>"
     ).json(str(src))
-    q = attach_knn(
-        stream, str(ix), str(tmp_path / "ckpt"), nprobe=8
+    q = attach(
+        knn_update_batch, stream, str(ix), str(tmp_path / "ckpt"), nprobe=8
     ).trigger(availableNow=True).start()
     q.awaitTermination(120)
     after = _edges(spark, ix)

@@ -3,7 +3,7 @@
 Batch-sequence semantics are exercised by calling the foreachBatch
 callback directly with static frames (that IS the unit Structured
 Streaming invokes); a live readStream wiring is smoke-tested through
-attach_incremental_dedup. All fixture texts were chosen so the MinHash
+state.attach. All fixture texts were chosen so the MinHash
 band collisions are DETERMINISTIC (fixed md5-derived constants): the
 "warm" variant of the fox doc shares 2 of 4 band buckets with it, the
 "different" doc shares 0.
@@ -92,8 +92,9 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
     import os
 
     from sparkstreamingflume_spark.streaming.neardup import (
-        attach_incremental_dedup,
+        incremental_dedup_batch,
     )
+    from sparkstreamingflume_spark.streaming.state import attach
 
     src = tmp_path / "src"
     os.makedirs(src)
@@ -104,11 +105,12 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
         spark.readStream.schema("doc_id long, text string")
         .json(str(src))
     )
-    q = attach_incremental_dedup(
+    q = attach(
+        incremental_dedup_batch,
         stream,
         str(tmp_path / "ix"),
-        str(tmp_path / "out"),
         str(tmp_path / "ckpt"),
+        out_dir=str(tmp_path / "out"),
     ).start()
     try:
         q.processAllAvailable()

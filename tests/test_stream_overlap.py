@@ -100,6 +100,42 @@ def test_compaction_is_pure_hygiene(spark, tmp_path):
     assert _stream_output(spark, ix) == _batch_output(spark)
 
 
+def test_compaction_recovers_crash_leftovers(spark, tmp_path):
+    """compact_signatures runs the shared state.recover_index on "sig"
+    first: a leaked fold dir is swept, a ``.sig_old`` with no live dir
+    is restored, and a stale one next to a live dir is dropped — and
+    the estimates read the same after each."""
+    import os
+    import shutil
+
+    from sparkstreamingflume_spark.streaming.overlap import (
+        compact_signatures,
+    )
+
+    ix = tmp_path / "ix"
+    _feed(spark, ix, (17,))
+    want = _stream_output(spark, ix)
+
+    leaked = ix / ".sig_compact_tmp"
+    os.makedirs(leaked)
+    (leaked / "part-junk.parquet").write_text("not parquet")
+    assert compact_signatures(spark, str(ix))
+    assert not leaked.exists()
+    assert _stream_output(spark, ix) == want
+
+    _feed(spark, ix, (29,))  # replayed partials: >1 file to fold again
+    os.rename(ix / "sig", ix / ".sig_old")
+    assert compact_signatures(spark, str(ix))
+    assert (ix / "sig").is_dir() and not (ix / ".sig_old").exists()
+    assert _stream_output(spark, ix) == want
+
+    _feed(spark, ix, (5,))
+    shutil.copytree(ix / "sig", ix / ".sig_old")
+    assert compact_signatures(spark, str(ix))
+    assert not (ix / ".sig_old").exists()
+    assert _stream_output(spark, ix) == want
+
+
 def test_empty_and_short_batches_append_nothing(spark, tmp_path):
     from sparkstreamingflume_spark.streaming.overlap import (
         overlap_update_batch,
@@ -125,9 +161,10 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
     import os
 
     from sparkstreamingflume_spark.streaming.overlap import (
-        attach_overlap,
+        overlap_update_batch,
         source_overlap,
     )
+    from sparkstreamingflume_spark.streaming.state import attach
 
     src = tmp_path / "src"
     os.makedirs(src)
@@ -144,8 +181,11 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
     stream = spark.readStream.schema(
         "doc_id long, text string, source string"
     ).json(str(src))
-    q = attach_overlap(
-        stream, str(tmp_path / "ix"), str(tmp_path / "ckpt")
+    q = attach(
+        overlap_update_batch,
+        stream,
+        str(tmp_path / "ix"),
+        str(tmp_path / "ckpt"),
     ).start()
     try:
         q.processAllAvailable()

@@ -156,9 +156,10 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
     import os
 
     from sparkstreamingflume_spark.streaming.quantile import (
-        attach_hdr,
+        hdr_update_batch,
         quantiles,
     )
+    from sparkstreamingflume_spark.streaming.state import attach
 
     src = tmp_path / "src"
     os.makedirs(src)
@@ -180,8 +181,8 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
         "event_id long, user_id long, event_type string, value double,"
         " props string"
     ).json(str(src))
-    q = attach_hdr(
-        stream, str(tmp_path / "ix"), str(tmp_path / "ckpt")
+    q = attach(
+        hdr_update_batch, stream, str(tmp_path / "ix"), str(tmp_path / "ckpt")
     ).start()
     try:
         q.processAllAvailable()

@@ -7,7 +7,7 @@ own correctness the DuckDB oracle gate carries) — under different batch
 boundaries, under replay, and across compaction. Batch-sequence
 semantics are exercised by calling the callback directly with static
 frames (that IS the unit Structured Streaming invokes); the live wiring
-is smoke-tested through attach_cms.
+is smoke-tested through state.attach.
 """
 
 from __future__ import annotations
@@ -156,9 +156,10 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
     import os
 
     from sparkstreamingflume_spark.streaming.sketch import (
-        attach_cms,
+        cms_update_batch,
         heavy_hitters,
     )
+    from sparkstreamingflume_spark.streaming.state import attach
 
     src = tmp_path / "src"
     os.makedirs(src)
@@ -168,7 +169,9 @@ def test_attach_runs_as_real_stream(spark, tmp_path):
     stream = spark.readStream.schema("doc_id long, text string").json(
         str(src)
     )
-    q = attach_cms(stream, str(tmp_path / "ix"), str(tmp_path / "ckpt")).start()
+    q = attach(
+        cms_update_batch, stream, str(tmp_path / "ix"), str(tmp_path / "ckpt")
+    ).start()
     try:
         q.processAllAvailable()
     finally:

@@ -3,6 +3,8 @@
 # Shards 1-3 hold the zero-Python stream twins (test_stream_*_fb,
 # test_stream_regimes, test_stream_sessions) next to lighter files, so
 # no shard is empty and none of them outlasts the media/kNN shards.
+# Shard 2 also runs the soak smoke test (tests/test_soak.py, one ~1 min
+# tools/soak.py subprocess with its own JVM).
 #
 # Invariants encoded here:
 # * conftest pins local[4], so 8 shards saturate the 32-core box.
@@ -21,7 +23,7 @@ mkdir -p "$OUT"
 
 declare -A GROUP
 GROUP[1]="test_stream_sessions test_approx test_stream_funnels_fb test_stream_regimes"
-GROUP[2]="test_sketch_search test_stream_retentions_fb test_stream_transitions_fb"
+GROUP[2]="test_sketch_search test_stream_retentions_fb test_stream_transitions_fb test_soak"
 GROUP[3]="test_stream_hll test_stream_neardup test_pipeline"
 GROUP[4]="test_stream_knn test_stream_dedup test_stream_join test_state_index"
 GROUP[5]="test_stream_media_neardup test_multimodal"
