@@ -41,17 +41,21 @@ def line_fields(line: Column | str, sep: str = "|") -> Column:
     are dropped (the reference's GPRS sample line ends in ``|`` and still
     splits to 44 fields, src/DesenPross.scala:181). Spark's ``split`` uses
     limit=-1 (keeps trailing empties), so we strip the trailing separator
-    run first. The strip anchors on ``\\z`` (Java end-of-input), NOT ``$``:
-    Java-regex ``$`` also matches *before* a final line terminator, so a
-    CR/CRLF-terminated record (``'a|b|\\r'`` — the normal case for a CDR
-    feed read off FTP/socket) would mis-split under ``$`` (the trailing
-    ``|`` is deleted and ``\\r`` merges into the prior field; Scala
-    ``split`` keeps it as its own field). DuckDB oracles apply
+    run first, with ``rtrim(line, sep)``: a compiled character trim, no
+    regex per row. It is exact because ``sep`` is one character (the
+    trim set is that character alone) and a trim only removes the run at
+    the end of input. A CR/CRLF-terminated record (``'a|b|\\r'`` — the
+    normal case for a CDR feed read off FTP/socket) ends in ``\\r``, so
+    nothing is stripped and ``\\r`` stays its own field, as in Scala
+    ``split`` (a Java-regex ``<sep>+$`` strip would be wrong here: ``$``
+    also matches before a final line terminator, deleting the ``|`` and
+    merging ``\\r`` into the prior field). DuckDB oracles apply
     ``regexp_replace(line, '<sep>+$', '')`` — RE2's ``$`` is already
     end-of-text, so both engines implement the same semantics.
     """
-    sep_re = re.escape(sep)
-    return F.split(F.regexp_replace(_col(line), f"{sep_re}+\\z", ""), sep_re)
+    if len(sep) != 1:
+        raise ValueError(f"line_fields needs a one-character separator, got {sep!r}")
+    return F.split(F.rtrim(_col(line), F.lit(sep)), re.escape(sep))
 
 
 # The *_arr forms take an ALREADY-SPLIT field array instead of the raw

@@ -13,10 +13,11 @@ src/StreamingSocketProcess.scala:138-159), 44 fields for clean rows
 dirty rows (~10%), a trailing '|' on ~14% of rows to pin the Java
 ``split(sep, 0)`` trailing-empty-drop semantics cross-engine, and a
 trailing CR (``\\r``) on ~8% of rows — including ``...|\\r`` where the two
-overlap — so the ``\\z`` end-of-INPUT anchor in ``line_fields`` (vs Java
-``$``, which also matches before a final line terminator and would
-mis-strip the pipe) is exercised by DRIVER-certified queries, not just
-pytest (functions/lines.py:44-51).
+overlap — so ``line_fields``' strip of the separator run at the end of
+INPUT only (vs a Java ``$`` anchor, which also matches before a final
+line terminator and would mis-strip the pipe) is exercised by
+DRIVER-certified queries, not just pytest (functions/lines.py
+``line_fields``).
 
 Determinism discipline (registry.py): every computed column aliased
 identically on both sides; float aggregates scaled to BIGINT cents before
@@ -553,10 +554,14 @@ def q_group_concat(spark: SparkSession, sf_dir: str) -> DataFrame:
     # task; measured 1.24 -> 0.86 s med at sf0.1 (interleaved A/B). The
     # old round-robin widen shipped full lines through a sorted
     # exchange and lost (1.26 vs 0.93 narrow, round-8 note).
+    # sort_array, not array_sort: array_sort's default comparator is an
+    # interpreted lambda per comparison, sort_array a native ordering.
+    # collect_list holds no nulls (and concat_ws never returns one), so
+    # both give the same order.
     df = _cdr_lines(spark, sf_dir)
     item = F.concat_ws("-", "l_orderkey", "l_linenumber")
     return df.groupBy("rec_type").agg(
-        F.array_join(F.array_sort(F.collect_list(item)), ",").alias("payload")
+        F.array_join(F.sort_array(F.collect_list(item)), ",").alias("payload")
     )
 
 

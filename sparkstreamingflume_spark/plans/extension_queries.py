@@ -2557,7 +2557,7 @@ def _km_update_sql(assign: str, out: str) -> str:
     "(linear, K-bounded); the update is a posexplode to (vec, dim) "
     "rows and ONE map-side-combinable sum/count over K*dim groups (512 "
     "rows), reassembled into centroid arrays driver-free via "
-    "array_sort(collect_list(struct(dim, mean))). An emptied cluster "
+    "sort_array(collect_list(struct(dim, mean))). An emptied cluster "
     "simply drops out of the next assignment (mirrored in both "
     "engines). Lloyd's monotonicity (inertia never increases) is "
     "pinned by tests/test_approx.py in pure Python. 100 TB: the only "
@@ -2610,7 +2610,9 @@ def q_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         return per_dim.groupBy("centroid_id").agg(
             F.transform(
-                F.array_sort(F.collect_list(F.struct("dim", "mv"))),
+                # a struct is never null: sort_array's native ordering
+                # equals array_sort's lambda comparator here
+                F.sort_array(F.collect_list(F.struct("dim", "mv"))),
                 lambda s: s.getField("mv"),
             ).alias("cv")
         )

@@ -2285,8 +2285,10 @@ def q_bloom_filter_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(words, "word", "left")
         .select("word", F.coalesce("w", F.lit(0)).cast("long").alias("w"))
         .agg(
+            # a struct is never null: sort_array's native ordering, no
+            # per-comparison lambda (array_sort's default comparator)
             F.expr(
-                "transform(array_sort(collect_list(struct(word, w))),"
+                "transform(sort_array(collect_list(struct(word, w))),"
                 " s -> s.w)"
             ).alias("bf")
         )

@@ -15,8 +15,10 @@ runtime, and skew-join splitting handles hot keys).
 from __future__ import annotations
 
 import os
+import stat
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
@@ -98,8 +100,58 @@ def get_session(app_name: str = "sparkstreamingflume_spark", master: str | None 
     return spark
 
 
-def load_table(spark: SparkSession, sf_dir: str, name: str):
+# The SQL confs that steer what schema Spark infers from a parquet footer
+# (ParquetToSparkSchemaConverter): a memoized schema is only reused under
+# the same values.
+_PARQUET_INFERENCE_CONFS = (
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.caseSensitive",
+)
+# realpath -> (file version and conf values, schema inferred under them);
+# one entry per file, so a rewritten file replaces its entry.
+_parquet_schemas: dict[str, tuple[tuple, StructType]] = {}
+
+
+def _read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)``, inferring the schema once per file
+    version: inference starts a Spark job that reads the footer, a
+    user-given schema starts none."""
+    try:
+        st = os.stat(path)
+    except OSError:
+        st = None
+    if st is None or not stat.S_ISREG(st.st_mode):
+        return spark.read.parquet(path)  # not a local file: no version to key on
+    real = os.path.realpath(path)
+    version = (
+        st.st_ino,
+        st.st_size,
+        st.st_mtime_ns,
+        tuple(spark.conf.get(k) for k in _PARQUET_INFERENCE_CONFS),
+    )
+    hit = _parquet_schemas.get(real)
+    if hit is not None and hit[0] == version:
+        return spark.read.schema(hit[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _parquet_schemas[real] = (version, df.schema)
+    return df
+
+
+def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Read one synthetic table (TESTDATA.md) as a DataFrame.
+
+    The parquet schema is inferred once per file version and reused
+    afterwards, so a repeated load starts no footer-reading job. The memo
+    is keyed on the file's realpath, inode, size and ``st_mtime_ns`` and
+    on the values of the SQL confs that steer parquet inference
+    (``_PARQUET_INFERENCE_CONFS``); a rewritten file or a flipped conf
+    infers again. It keeps one entry per file and holds only
+    ``StructType``s: no data and no JVM handles. A path that is not a
+    local file is read as before.
 
     ``events.parquet`` has shipped with two encodings for ``ts`` across
     fixture generations: legacy TIMESTAMP(NANOS) (which Spark's vectorized
@@ -115,19 +167,20 @@ def load_table(spark: SparkSession, sf_dir: str, name: str):
     produced). ``nanosAsLong`` stays set so BOTH encodings load
     regardless of which generation the fixtures are.
     """
+    path = f"{sf_dir}/{name}.parquet"
     if name == "events":
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         from pyspark.sql import functions as F
         from pyspark.sql.types import LongType, TimestampNTZType
 
-        df = spark.read.parquet(f"{sf_dir}/{name}.parquet")
+        df = _read_parquet(spark, path)
         ts_type = df.schema["ts"].dataType
         if isinstance(ts_type, LongType):
             df = df.withColumn("ts", F.timestamp_micros(F.expr("ts div 1000")))
         elif isinstance(ts_type, TimestampNTZType):
             df = df.withColumn("ts", F.col("ts").cast("timestamp"))
         return df
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return _read_parquet(spark, path)
 
 
 # Longest suffix first: Spark's JavaUtils.byteStringAs accepts both the

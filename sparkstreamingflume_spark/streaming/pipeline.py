@@ -130,10 +130,7 @@ def routed_pipeline_dual(
     sep = types[0][1].sep  # all six socket types are comma-delimited
     routed = route(df).filter(F.col("rec_type").isin(*[p for p, _ in types]))
     rt_col = F.col("rec_type")
-    # \z (end-of-input), not $: Java $ matches before a final \r, which
-    # would swallow the separator on CRLF-terminated records (lines.py).
-    arr = F.split(F.regexp_replace(F.col("value"), f"{sep}+\\z", ""), sep)
-    with_arr = routed.withColumn("_arr", arr).filter(
+    with_arr = routed.withColumn("_arr", L.line_fields("value", sep=sep)).filter(
         F.size("_arr") == F.element_at(m_nf, rt_col)
     )
     mask_set = F.element_at(m_mask, rt_col)

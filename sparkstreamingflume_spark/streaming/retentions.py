@@ -171,9 +171,13 @@ def retention_update_batch(
         .write.mode("append")
         .parquet(f"{index_dir}/delta")
     )
+    # sort_array (native ordering), not array_sort (a lambda comparator):
+    # neither array holds a null. new_days comes from collect_set, which
+    # drops nulls, over days of non-null ts; p_days is an earlier batch's
+    # ``days``, built here from the same two arrays.
     state_new = j.select(
         "user_id",
-        F.array_sort(
+        F.sort_array(
             F.array_union(
                 F.coalesce("p_days", F.array().cast("array<long>")),
                 "new_days",

@@ -2,6 +2,8 @@
 
 from __future__ import annotations
 
+import re
+
 import pytest
 
 
@@ -211,6 +213,23 @@ def test_gprs_pipeline_plan_stays_staged(spark):
     )
     assert plan.count("md5(") == 4, plan.count("md5(")
     assert plan.count("split(") == 1, plan.count("split(")
+    # line_fields strips the trailing separator with rtrim, not a regex
+    assert "regexp_replace(" not in plan, plan
+
+
+def test_group_concat_sorts_without_a_lambda(spark):
+    """q_group_concat orders its payload with sort_array's native
+    ordering; array_sort's default comparator is an interpreted lambda
+    evaluated per comparison."""
+    from sparkstreamingflume_spark.plans import REGISTRY
+
+    plan = (
+        REGISTRY["q_group_concat"]
+        .build(spark, "/root/testdata/sf0.001")
+        ._jdf.queryExecution().optimizedPlan().toString()
+    )
+    assert "sort_array(" in plan, plan
+    assert "lambdafunction" not in plan, plan
 
 
 def test_line_family_splits_once_and_filter_stays_staged(spark):
@@ -253,6 +272,15 @@ def test_line_family_splits_once_and_filter_stays_staged(spark):
             )
 
 
+# array_sort's default comparator as it prints in a plan: an interpreted
+# lambda per comparison, where sort_array (same order when no element is
+# null) compares natively.
+_DEFAULT_ARRAY_SORT = re.compile(
+    r"array_sort\(.*?lambdafunction\(if \(\(lambda left#\d+ < lambda right#\d+\)\)"
+    r" -1 else if \(\(lambda left#\d+ > lambda right#\d+\)\) 1 else 0"
+)
+
+
 def test_no_python_row_path_or_cartesian_anywhere(spark):
     """Global scale invariants over EVERY registered query (primaries and
     extras): no Python ROW path (BatchEvalPython = row-at-a-time pickled
@@ -263,16 +291,22 @@ def test_no_python_row_path_or_cartesian_anywhere(spark):
     explicitly allowed: the banned thing is per-row pickling, not Python.
     Broadcast nested loops are vetted per-query (see
     test_embed_cosine_pairs_have_no_allpairs_join); these two node types
-    are never acceptable."""
+    are never acceptable. Nor is array_sort's default comparator: every
+    registered sort is over null-free arrays, where sort_array gives the
+    same order without a lambda."""
     from sparkstreamingflume_spark.plans import REGISTRY
 
     sf = "/root/testdata/sf0.001"
     for name, q in sorted(REGISTRY.items()):
-        plan = (
-            q.build(spark, sf)._jdf.queryExecution().executedPlan().toString()
-        )
+        qe = q.build(spark, sf)._jdf.queryExecution()
+        plan = qe.executedPlan().toString()
         assert "BatchEvalPython" not in plan, f"{name} has a Python row path"
         assert "CartesianProduct" not in plan, f"{name} has a cartesian product"
+        # the optimized plan: the adaptive executed plan's string omits
+        # aggregate result expressions
+        assert not _DEFAULT_ARRAY_SORT.search(qe.optimizedPlan().toString()), (
+            f"{name} sorts with array_sort's default comparator; use sort_array"
+        )
 
 
 def test_connected_components_fast_pointer_doubling(spark):
