@@ -46,40 +46,19 @@ protocols; every read is swap-tolerant via ``read_state``):
   reads the live index exactly as it reads the batch-materialized
   parquet.
 * ``<index_dir>/meta``    — one row (base_members, geom_gen): the
-  member count at the last (re)bootstrap (the growth trigger's
-  denominator) and the geometry generation marker.
+  member count at the last (re)build (the growth trigger's
+  denominator) and the geometry generation.
 
-Geometry staleness (round-10 verdict task 4): the frozen bootstrap
-geometry decays as the corpus grows — cells fatten, per-batch probe
-cost rises linearly with average occupancy (the r10 soak measured
-+26% members → +15% batch time). The rebuild is SPLIT so the build
-never rides the maintenance slot (round-11 verdict task 3 — the r11
-in-slot form pushed re-bootstrap batches to p99 24.7 s against a 20 s
-trigger): :func:`prepare_rebootstrap` builds the next geometry into
-staged dirs off-slot (read-only against live state, safe concurrent
-with ingest) — new cell count max(8, n/TARGET_CELL), centroids = the
-k smallest-id reps (the same deterministic first-ids convention as
-the batch ``_adaptive_assign``), every snapshot member re-assigned to
-its nearest new cell — and :func:`commit_rebootstrap` turns it live
-in the slot: re-assign the late tail (appended since the snapshot),
-then pure renames (cents, members) and the meta stamp. EDGE ROWS ARE
-UNTOUCHED (the backward-looking contract: a vector's neighbor list
-was fixed at its arrival and a geometry change must not rewrite
-history — pinned in tests/test_stream_knn.py).
-:func:`maybe_prepare_rebootstrap` triggers the off-slot build when
-members ≥ growth_factor × base_members (default 2.0 — "re-bootstrap
-when the corpus has doubled", the incremental-IVF contract);
-:func:`maybe_rebootstrap` is the synchronous compat form. cents rows
-and meta carry ``geom_gen`` stamped on opposite ends of the commit
-sequence, so a crash ANYWHERE inside the commit leaves them unequal —
-``knn_update_batch`` detects that before probing and finishes the
-staged commit (idempotent), closing the mixed-geometry read window
-(ADVICE r11 #3). Commit/maintenance remain single-writer, between
-batches. A batch that crashed AFTER its append but BEFORE its
-checkpoint commit and is replayed AFTER a re-bootstrap re-scores
-against the new geometry, so its re-appended edges may differ from
-the orphaned originals — the same quiet-point discipline compaction
-already requires.
+Geometry staleness: the frozen geometry decays as the corpus grows
+(cells fatten; the r10 soak measured +26% members → +15% batch time),
+so :data:`GEOMETRY` hands the index to the shared generational rebuild
+(``state.prepare_rebuild`` / ``commit_rebuild``): new cells from the
+collapsed member snapshot, every member re-assigned. EDGE ROWS ARE
+NEVER REWRITTEN (the backward-looking contract: a vector's neighbor
+list was fixed at its arrival — pinned in tests/test_stream_knn.py). A
+batch replayed after a rebuild re-scores against the new geometry, so
+its re-appended edges may differ from the orphaned originals — the
+same quiet-point discipline compaction already requires.
 
 Idempotency: members probe strictly-earlier batches and edge/member
 appends are deterministic functions of (batch rows, prior index), so
@@ -99,11 +78,10 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkstreamingflume_spark.streaming.state import (
+    Geometry,
+    ensure_geometry,
     first_batch_compact,
-    first_batch_rows,
     read_state,
-    recover_index,
-    swap_in,
     write_swap,
 )
 
@@ -117,14 +95,10 @@ MEMBERS_SCHEMA = (
 EDGES_SCHEMA = (
     "q_id long, nbr_id long, cos_ppm long, rn long, batch_id long"
 )
-# geom_gen: the geometry GENERATION marker (ADVICE r11 #3) — stamped
-# into cents rows and meta together; a crash inside a geometry commit
-# leaves them unequal, which knn_update_batch detects before probing
-# (and repairs via commit_rebootstrap) instead of quietly joining
-# members against centroids from a different geometry. Indexes
-# predating the column read it as NULL -> coalesced to 0.
+# geom_gen: the geometry generation, stamped into cents rows and meta
+# at opposite ends of a rebuild commit (state.ensure_geometry). Indexes
+# predating the column read it as NULL -> 0.
 META_SCHEMA = "base_members long, geom_gen long"
-GEOM_STAGED_SCHEMA = "geom_gen long, wm long, k long, n_snapshot long"
 
 
 def _cos_ppm_ab() -> F.Column:
@@ -216,9 +190,8 @@ def knn_update_batch(
     spark = batch.sparkSession
     # a crashed geometry commit must be finished BEFORE probing —
     # otherwise member.centroid_id joins against centroids from a
-    # different geometry (ADVICE r11 #3; two tiny aggregates when
-    # consistent)
-    _ensure_geometry_consistent(spark, index_dir)
+    # different geometry
+    ensure_geometry(spark, index_dir, GEOMETRY)
     cents = read_state(spark, index_dir, "cents", CENTS_SCHEMA)
     members = read_state(spark, index_dir, "members", MEMBERS_SCHEMA).filter(
         F.col("batch_id") < F.lit(int(batch_id))
@@ -362,32 +335,30 @@ def compact_index(spark: SparkSession, index_dir: str) -> dict:
     return stats
 
 
-def _gen_of(df: DataFrame) -> int:
-    """Max coalesced geom_gen of a state frame; -1 when empty (absent
-    state must SKIP the consistency check, not fail it)."""
-    row = df.agg(F.max(F.coalesce(F.col("geom_gen"), F.lit(0)))).first()
-    return -1 if row[0] is None else int(row[0])
+def _build(snapshot: DataFrame, n: int) -> tuple[DataFrame, int]:
+    """The next geometry: k = max(8, ceil(n/TARGET_CELL)) cells whose
+    centroids are the k smallest-id reps (the batch scaffolding's
+    first-ids convention)."""
+    import math
+
+    from sparkstreamingflume_spark.plans.extension_queries import (
+        EMB_TARGET_CELL,
+    )
+
+    k = max(8, math.ceil(n / EMB_TARGET_CELL))
+    cents = (
+        snapshot.orderBy("vec_id")
+        .limit(k)
+        .select(
+            F.col("vec_id").alias("centroid_id"),
+            F.col("emb").alias("cemb"),
+            F.col("norm").alias("cnorm"),
+        )
+    )
+    return cents, k
 
 
-def _ensure_geometry_consistent(spark: SparkSession, index_dir: str) -> None:
-    """ADVICE r11 #3: a crash inside a geometry commit can leave new
-    cents against old-geometry members, and a probe in that window
-    joins member.centroid_id against centroids from a DIFFERENT
-    geometry — quietly wrong candidate sets. cents rows and meta are
-    stamped with ``geom_gen`` on opposite ends of the commit sequence
-    (cents swap first, meta stamp last), so inequality detects every
-    partial-commit window; the repair is the idempotent
-    :func:`commit_rebootstrap`, which finishes the staged swap before
-    any probe runs. Cost when consistent: two tiny aggregates (cents
-    is a broadcast-sized frame; meta is one row)."""
-    g_c = _gen_of(read_state(spark, index_dir, "cents", CENTS_SCHEMA))
-    g_m = _gen_of(read_state(spark, index_dir, "meta", META_SCHEMA))
-    if g_c < 0 or g_m < 0 or g_c == g_m:
-        return
-    commit_rebootstrap(spark, index_dir)
-
-
-def _reassign(members: DataFrame, cents: DataFrame) -> DataFrame:
+def _reassign(members: DataFrame, cents: DataFrame, _k: int) -> DataFrame:
     """Nearest-new-centroid re-assignment of a member frame via one
     broadcast pass — MEMBERS_SCHEMA in, MEMBERS_SCHEMA out (only
     centroid_id changes, so the ``batch_id < B`` replay guard and the
@@ -422,277 +393,21 @@ def _reassign(members: DataFrame, cents: DataFrame) -> DataFrame:
     )
 
 
-def prepare_rebootstrap(
-    spark: SparkSession, index_dir: str, background: bool = False
-) -> dict | None:
-    """Phase 1 of the geometry rebuild — build the NEXT geometry into
-    STAGED dirs, touching no live state (round-11 verdict task 3: the
-    ~9 s in-slot rebuild pushed re-bootstrap batches to p99 24.7 s
-    against a 20 s trigger; staged, the slot pays only directory
-    renames plus a small late-tail re-assignment). Safe to run
-    CONCURRENTLY with ingest batches — it only reads live state (the
-    single-writer discipline still applies between maintenance calls).
-
-    ``background=True`` (a live stream's off-slot thread) SKIPS the
-    mutating crash recovery (ADVICE r12 #1: recover_index deletes
-    ``.{name}_tmp`` / renames ``.{name}_old`` back, so racing the
-    in-slot compact/commit it can delete a tmp dir mid-write_swap or
-    rename stale state back mid-swap_in, killing the stream inside
-    foreachBatch). Recovery already runs in EVERY slot-side
-    maintenance call (compact_index, commit_rebootstrap, _growth_due),
-    so a background prepare only ever reads already-recovered state —
-    and if a swap races one of its reads, the prepare fails and is
-    simply re-kicked next slot (the caller's retry contract).
-
-    Steps: materialize a collapsed snapshot of the live members at
-    ``.geom_snap`` (one action, so every derived plan reads a STABLE
-    file set — a lazy plan over the live dir could see files appended
-    mid-build); new cell count k = max(8, n/TARGET_CELL); new
-    centroids = the k smallest-id reps (the batch scaffolding's
-    first-ids convention); every snapshot member re-assigned to its
-    nearest new centroid. The staged manifest (``geom_staged`` state,
-    carrying geom_gen / snapshot watermark / k / n) is written LAST,
-    so a crashed prepare leaves no manifest and is simply re-run.
-    Returns the manifest stats, or None on an empty index."""
-    import math
-
-    from sparkstreamingflume_spark.plans.extension_queries import (
-        EMB_TARGET_CELL,
-    )
-    from sparkstreamingflume_spark.streaming.state import _hadoop_fs, _jp
-
-    if not background:
-        for name in ("cents", "members", "meta"):
-            recover_index(spark, index_dir, name)
-    gen_next = (
-        max(0, _gen_of(read_state(spark, index_dir, "meta", META_SCHEMA)))
-        + 1
-    )
-    members = read_state(spark, index_dir, "members", MEMBERS_SCHEMA)
-    # collapse replay duplicates exactly as compact_index would (MIN
-    # batch_id per vec_id) so the rebuilt index is compact too
-    collapsed = first_batch_rows(members, ["vec_id"])
-    snap = f"{index_dir}/.geom_snap"
-    collapsed.write.mode("overwrite").parquet(snap)
-    snap_df = spark.read.schema(MEMBERS_SCHEMA).parquet(snap)
-    agg = snap_df.agg(
-        F.count("*").alias("n"),
-        F.coalesce(F.max("batch_id"), F.lit(-1)).alias("wm"),
-    ).first()
-    n = int(agg["n"])
-    if n == 0:
-        return None
-    wm = int(agg["wm"])
-    k = max(8, math.ceil(n / EMB_TARGET_CELL))
-    cents_new = (
-        snap_df.orderBy("vec_id")
-        .limit(k)
-        .select(
-            F.col("vec_id").alias("centroid_id"),
-            F.col("emb").alias("cemb"),
-            F.col("norm").alias("cnorm"),
-            F.lit(gen_next).cast("long").alias("geom_gen"),
-        )
-    )
-    cents_staged = f"{index_dir}/.cents_staged"
-    cents_new.repartition(1).write.mode("overwrite").parquet(cents_staged)
-    staged_c = spark.read.schema(CENTS_SCHEMA).parquet(cents_staged)
-    _reassign(snap_df, staged_c).write.mode("overwrite").parquet(
-        f"{index_dir}/.members_staged"
-    )
-    write_swap(
-        spark,
-        spark.createDataFrame([(gen_next, wm, k, n)], GEOM_STAGED_SCHEMA),
-        index_dir,
-        "geom_staged",
-    )
-    fs, _ = _hadoop_fs(spark, index_dir)
-    fs.delete(_jp(spark, snap), True)
-    return {"geom_gen": gen_next, "cells": k, "n_snapshot": n, "wm": wm}
-
-
-def commit_rebootstrap(spark: SparkSession, index_dir: str) -> dict | None:
-    """Phase 2 — the maintenance-slot half, and the idempotent
-    completer for every crash window. Re-assigns the LATE TAIL
-    (members appended since the snapshot: ``batch_id >= wm`` — the
-    snapshot may hold a partial view of batch wm if it listed files
-    mid-append — anti-joined against the staged ids, so re-runs
-    append nothing twice) against the staged centroids, appends it to
-    the staged members, then swaps cents, swaps members, stamps meta
-    (gen LAST — the consistency check's other end), and drops the
-    manifest. Pure renames except the tail; in-slot cost is
-    O(tail), not O(index). EDGES ARE PRESERVED VERBATIM
-    (backward-looking contract). Single-writer, like compaction.
-    Returns stats, or None when nothing is staged."""
-    from sparkstreamingflume_spark.streaming.state import _hadoop_fs, _jp
-
-    for name in ("cents", "members", "meta"):
-        recover_index(spark, index_dir, name)
-    man = read_state(
-        spark, index_dir, "geom_staged", GEOM_STAGED_SCHEMA
-    ).collect()
-    if not man:
-        return None
-    gen, wm, k = (
-        int(man[0].geom_gen),
-        int(man[0].wm),
-        int(man[0].k),
-    )
-    fs, _ = _hadoop_fs(spark, index_dir)
-    # ADVICE r12 #2: a crash between the meta stamp and the manifest
-    # delete leaves a manifest whose gen is ALREADY live (cents == meta
-    # gens, so the consistency check never fires) — without this guard
-    # the stale manifest makes maybe_prepare_rebootstrap return None
-    # forever, permanently disabling growth rebuilds. gen <= live meta
-    # gen means the commit completed: drop the leftovers and move on.
-    if gen <= _gen_of(read_state(spark, index_dir, "meta", META_SCHEMA)):
-        # drop ONLY the manifest — a concurrent background prepare may
-        # be mid-build on .geom_snap; its own completion path (or the
-        # normal commit) owns the snap's lifecycle
-        fs.delete(_jp(spark, f"{index_dir}/geom_staged"), True)
-        return None
-    cents_staged = f"{index_dir}/.cents_staged"
-    members_staged = f"{index_dir}/.members_staged"
-    n_tail = 0
-    if fs.exists(_jp(spark, cents_staged)):
-        staged_c = spark.read.schema(CENTS_SCHEMA).parquet(cents_staged)
-        staged_ids = spark.read.schema(MEMBERS_SCHEMA).parquet(
-            members_staged
-        ).select("vec_id")
-        live = read_state(spark, index_dir, "members", MEMBERS_SCHEMA)
-        vw = Window.partitionBy("vec_id").orderBy("batch_id")
-        tail = (
-            live.filter(F.col("batch_id") >= F.lit(wm))
-            .join(staged_ids, "vec_id", "left_anti")
-            .withColumn("_rn", F.row_number().over(vw))
-            .filter(F.col("_rn") == 1)
-            .drop("_rn")
-        )
-        tail = _reassign(tail, staged_c).persist()
-        n_tail = tail.count()
-        if n_tail:
-            tail.write.mode("append").parquet(members_staged)
-        tail.unpersist()
-        # cents first, then members, then meta: the check at
-        # _ensure_geometry_consistent detects a crash anywhere between
-        # the first rename and the meta stamp (cents gen != meta gen)
-        swap_in(spark, index_dir, "cents", cents_staged)
-    swap_in(spark, index_dir, "members", members_staged)
-    n_members = read_state(
-        spark, index_dir, "members", MEMBERS_SCHEMA
-    ).count()
-    write_swap(
-        spark,
-        spark.createDataFrame([(n_members, gen)], META_SCHEMA),
-        index_dir,
-        "meta",
-    )
-    fs.delete(_jp(spark, f"{index_dir}/geom_staged"), True)
-    fs.delete(_jp(spark, f"{index_dir}/.geom_snap"), True)
-    return {
-        "members": n_members,
-        "cells": k,
-        "geom_gen": gen,
-        "tail": n_tail,
-    }
-
-
-def rebootstrap_knn_index(spark: SparkSession, index_dir: str) -> dict:
-    """Synchronous geometry rebuild — :func:`prepare_rebootstrap` +
-    :func:`commit_rebootstrap` back to back (the round-11 in-slot
-    form, kept for tests and offline maintenance; a live stream should
-    prepare OFF the slot and commit in it — tools/soak.py knn mode)."""
-    if prepare_rebootstrap(spark, index_dir) is None:
-        return {"members": 0, "cells": 0}
-    done = commit_rebootstrap(spark, index_dir)
-    return {"members": done["members"], "cells": done["cells"]}
-
-
-def _growth_due(
-    spark: SparkSession, index_dir: str, growth_factor: float,
-    mutate: bool = True,
-) -> bool:
-    """The shared trigger: live distinct members >= factor × the base
-    stamped at the last (re)bootstrap. Recovers meta first (ADVICE
-    r11 #4 — this was the one maintenance path skipping the 'run
-    recover before any maintenance write' discipline); an index
-    predating the meta sidecar gets one stamped at the CURRENT size
-    (growth measured from now on) and reports not-due.
-
-    ``mutate=False`` (a background caller — ADVICE r12 #1) performs
-    NEITHER the recovery nor the legacy meta stamp: both mutate the
-    filesystem and could race the in-slot maintenance writer. A
-    legacy index just reports not-due until a slot-side call stamps
-    its meta."""
-    if mutate:
-        recover_index(spark, index_dir, "meta")
-    meta = read_state(spark, index_dir, "meta", META_SCHEMA).collect()
-    n = (
-        read_state(spark, index_dir, "members", MEMBERS_SCHEMA)
-        .select("vec_id")
-        .distinct()
-        .count()
-    )
-    if not meta and not mutate:
-        return False
-    if not meta:
-        gen = max(
-            0, _gen_of(read_state(spark, index_dir, "cents", CENTS_SCHEMA))
-        )
-        write_swap(
-            spark,
-            spark.createDataFrame([(n, gen)], META_SCHEMA),
-            index_dir,
-            "meta",
-        )
-        return False
-    base = int(meta[0].base_members)
-    return base > 0 and n >= growth_factor * base
-
-
-def maybe_rebootstrap(
-    spark: SparkSession, index_dir: str, growth_factor: float = 2.0
-) -> dict | None:
-    """Growth-triggered SYNCHRONOUS geometry rebuild ("re-bootstrap
-    when the corpus has doubled", the incremental-IVF contract).
-    Returns the rebuild stats, or None when no rebuild ran. Streaming
-    callers should prefer :func:`maybe_prepare_rebootstrap` (off-slot)
-    + :func:`commit_rebootstrap` (in-slot)."""
-    if not _growth_due(spark, index_dir, growth_factor):
-        return None
-    return rebootstrap_knn_index(spark, index_dir)
-
-
-def maybe_prepare_rebootstrap(
-    spark: SparkSession,
-    index_dir: str,
-    growth_factor: float = 2.0,
-    background: bool = False,
-) -> dict | None:
-    """The ASYNC trigger: when growth is due AND nothing is already
-    staged, build the next geometry into the staged dirs (read-only
-    against live state, so it can run on a background thread while
-    batches ingest). The next maintenance slot turns it live with
-    :func:`commit_rebootstrap` — renames + the late tail, not the
-    build. Returns prepare stats, or None (not due / already staged).
-
-    Live streams MUST pass ``background=True`` when calling off-slot:
-    it suppresses every mutating step (crash recovery, the legacy
-    meta stamp) that could race the in-slot maintenance writer
-    (ADVICE r12 #1). A manifest whose geom_gen is <= the live meta
-    gen is STALE (its commit completed; the crash hit the
-    manifest-delete tail — ADVICE r12 #2) and does not block a new
-    prepare: the prepare's final write_swap simply replaces it."""
-    staged = read_state(
-        spark, index_dir, "geom_staged", GEOM_STAGED_SCHEMA
-    ).collect()
-    if staged:
-        live_gen = _gen_of(read_state(spark, index_dir, "meta", META_SCHEMA))
-        if int(staged[0].geom_gen) > live_gen:
-            return None  # genuinely staged, awaiting its commit slot
-        # stale manifest (already committed): fall through and let the
-        # new prepare overwrite it (slot-side commit_rebootstrap also
-        # deletes it defensively)
-    if not _growth_due(spark, index_dir, growth_factor, mutate=not background):
-        return None
-    return prepare_rebootstrap(spark, index_dir, background=background)
+# The geometry rebuild (state.prepare_rebuild / commit_rebuild): new
+# cells from the collapsed member snapshot, every member re-assigned to
+# its nearest new cell. Edges are not part of it.
+GEOMETRY = Geometry(
+    geometry="cents",
+    geometry_schema=CENTS_SCHEMA,
+    meta="meta",
+    meta_schema=META_SCHEMA,
+    base_col="base_members",
+    rotated="members",
+    rotated_schema=MEMBERS_SCHEMA,
+    source="members",
+    source_schema=MEMBERS_SCHEMA,
+    keys=("vec_id",),
+    build=_build,
+    assign=_reassign,
+    meta_row=lambda k, base, gen: (base, gen),
+)

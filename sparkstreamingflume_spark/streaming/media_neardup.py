@@ -15,12 +15,11 @@ Model (the streaming/neardup.py + streaming/knn.py shape):
   Like the kNN index's cells, the frozen geometry DECAYS as the
   corpus grows (bucket occupancy rises toward BUCKET_CEIL, where
   candidate mass is silently pruned — the measured knn_frontier
-  --boundary mechanism): :func:`maybe_prepare_media_rebootstrap` /
-  :func:`commit_media_rebootstrap` rebuild planes + signatures FROM
-  THE LIVE HISTOGRAMS (featurizer output is geometry-independent, so
-  hists and the emitted pair history never rotate) with the staged
-  off-slot / in-slot-renames split and the geom_gen crash-detection
-  marker of streaming/knn.py.
+  --boundary mechanism), so :data:`GEOMETRY` hands the index to the
+  shared generational rebuild (``state.prepare_rebuild`` /
+  ``commit_rebuild``), which rebuilds planes + signatures from the live
+  histograms. HISTS ARE NEVER ROTATED, and neither is the emitted pair
+  history.
 * Each micro-batch of (media_id, payload BINARY) rows is featurized by
   the REAL Arrow-batched byte-histogram featurizer
   (extensions/multimodal.py ``content_histogram`` — the same counting
@@ -50,8 +49,8 @@ Index layout (plain parquet, the shared streaming/state.py protocols):
 * ``<index_dir>/planes`` — frozen (p, bucket, w) balanced-difference
   weights; broadcast into every batch.
 * ``<index_dir>/mmeta``  — one row (nbits, base_media, geom_gen):
-  the frozen band width, the media count at the last (re)bootstrap
-  (the growth trigger's denominator), and the generation marker.
+  the frozen band width, the media count at the last (re)build (the
+  growth trigger's denominator), and the geometry generation.
 * ``<index_dir>/sigs``   — (media_id, band, band_sig, batch_id).
 * ``<index_dir>/hists``  — (media_id, bucket, cnt, batch_id): the
   integer histograms the exact verify joins against.
@@ -79,40 +78,18 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from sparkstreamingflume_spark.streaming.state import (
-    _hadoop_fs,
+    Geometry,
+    ensure_geometry,
     first_batch_compact,
     read_state,
-    recover_index,
-    swap_in,
     write_swap,
 )
 
-# geom_gen: the geometry GENERATION marker (the streaming/knn.py
-# pattern): stamped into planes rows and mmeta on OPPOSITE ends of a
-# geometry commit, so a crash inside one leaves them unequal —
-# media_neardup_batch detects that before signing and finishes the
-# staged commit. Indexes predating the columns read NULL -> 0.
+# geom_gen: the geometry generation, stamped into planes rows and mmeta
+# at opposite ends of a rebuild commit (state.ensure_geometry). Indexes
+# predating the columns read NULL -> 0.
 PLANES_SCHEMA = "p int, bucket long, w long, geom_gen long"
 MMETA_SCHEMA = "nbits int, base_media long, geom_gen long"
-MGEOM_STAGED_SCHEMA = "geom_gen long, wm long, nbits int, n_snapshot long"
-# In-flight staging cursor for the SLICED re-sign (round-12 verdict
-# task 3): last_id = the largest media_id already re-signed into
-# .sigs_staged; the completion manifest (mgeom_staged) is written only
-# when the cursor runs off the end of the snapshot.
-MGEOM_PROGRESS_SCHEMA = (
-    "geom_gen long, wm long, nbits int, n_snapshot long, last_id long,"
-    " catchup_rounds long"
-)
-# Catch-up staging bound: after the snapshot cursor completes, media
-# that arrived DURING the crawl (batch_id >= wm, not yet staged) are
-# signed in further bounded slices, so the slot-side commit tail stays
-# <= max(slice_media, one interval's arrivals) instead of growing with
-# staging duration x ingest rate. CATCHUP_MAX caps the chase: if after
-# this many rounds the tail still exceeds the slice budget (arrival
-# rate >= staging throughput — the staging can never win), the
-# completion manifest is written anyway and the commit pays the
-# remaining tail in-slot, loudly visible in its returned "tail".
-MEDIA_CATCHUP_MAX = 16
 SIGS_SCHEMA = "media_id long, band int, band_sig long, batch_id long"
 HISTS_SCHEMA = "media_id long, bucket long, cnt long, batch_id long"
 
@@ -267,29 +244,6 @@ def _nbits_for(n: int) -> int:
     )
 
 
-def _mgen_of(df: DataFrame) -> int:
-    """Max coalesced geom_gen; -1 when empty (absent state skips the
-    consistency check rather than failing it)."""
-    row = df.agg(F.max(F.coalesce(F.col("geom_gen"), F.lit(0)))).first()
-    return -1 if row[0] is None else int(row[0])
-
-
-def _ensure_media_geometry_consistent(
-    spark: SparkSession, index_dir: str
-) -> None:
-    """planes rows and mmeta carry geom_gen stamped on opposite ends of
-    a geometry commit (planes swap first, mmeta stamp last): inequality
-    detects every partial-commit crash window, and the repair is the
-    idempotent :func:`commit_media_rebootstrap` — so no batch ever
-    signs against one generation's planes while probing another
-    generation's signatures."""
-    g_p = _mgen_of(read_state(spark, index_dir, "planes", PLANES_SCHEMA))
-    g_m = _mgen_of(read_state(spark, index_dir, "mmeta", MMETA_SCHEMA))
-    if g_p < 0 or g_m < 0 or g_p == g_m:
-        return
-    commit_media_rebootstrap(spark, index_dir)
-
-
 def bootstrap_media_index(
     spark: SparkSession,
     seed: DataFrame,
@@ -430,7 +384,7 @@ def media_neardup_batch(
     # a crashed geometry commit must be finished BEFORE signing —
     # otherwise this batch signs against one generation's planes while
     # probing another generation's signature index
-    _ensure_media_geometry_consistent(spark, index_dir)
+    ensure_geometry(spark, index_dir, GEOMETRY)
     meta = read_state(spark, index_dir, "mmeta", MMETA_SCHEMA).collect()
     if not meta:
         raise RuntimeError(
@@ -577,499 +531,40 @@ def compact_media_index(spark: SparkSession, index_dir: str) -> dict:
     return stats
 
 
-def prepare_media_rebootstrap(
-    spark: SparkSession,
-    index_dir: str,
-    background: bool = False,
-    slice_media: int | None = None,
-) -> dict | None:
-    """Phase 1 of the media geometry rebuild — the streaming/knn.py
-    staged pattern: the frozen bootstrap geometry decays as the corpus
-    grows (cells fatten; here, (band, band_sig) bucket occupancy grows
-    toward BUCKET_CEIL, where candidate mass starts getting silently
-    pruned — the measured knn_frontier --boundary mechanism), so when
-    the corpus has outgrown its band width the planes + signatures are
-    rebuilt FROM THE LIVE HISTOGRAMS (the featurizer output is
-    geometry-independent — hists never rotate). Builds into staged
-    dirs, touching no live state (``background=True`` additionally
-    skips the mutating crash recovery — ADVICE r12 #1, the
-    streaming/knn.py contract: recovery runs in every slot-side
-    maintenance call, so a background prepare must never race it).
+def _build(snapshot: DataFrame, n: int) -> tuple[DataFrame, int]:
+    """The next geometry: the band width for ``n`` media and planes
+    rebuilt from the snapshot's histograms."""
+    nbits = _nbits_for(n)
+    planes = _build_planes(snapshot.select("media_id", "bucket", "cnt"), nbits)
+    return planes, nbits
 
-    UNLIKE the kNN prepare (whose build is centroid-sized), the media
-    re-sign is CORPUS-sized — at 100x corpus a one-shot background
-    build starves ingest even at FAIR weight 1 (round-12 verdict
-    task 3: the rotation-concurrent batch hit p99 24.9 s > the 20 s
-    trigger). ``slice_media=N`` therefore makes the prepare a RESUMABLE
-    state machine, each call bounded:
 
-    * INIT (no progress cursor): snapshot the collapsed live hists at
-      ``.mgeom_snap`` (one linear pass — stable file set for every
-      later slice), build the staged planes (bounded: <=192 seed
-      media), write the ``mgeom_progress`` cursor. No media signed yet.
-    * SLICE (cursor present): re-sign the next <=N media ids (ordered,
-      ``media_id > last_id``, semi-joined from the snapshot) against
-      the staged planes, append to ``.sigs_staged`` (anti-joined
-      against ids already staged, so a crash between the append and
-      the cursor bump re-runs clean), advance the cursor.
-    * CATCHUP (cursor past the snapshot's last id, but more than one
-      slice of NEW media arrived during the crawl): keep signing the
-      late arrivals in bounded slices from the LIVE hists, up to
-      MEDIA_CATCHUP_MAX rounds — otherwise the slot-side commit tail
-      grows with staging duration x ingest rate (measured: an 18k-doc
-      tail after an 8-interval crawl at 100 docs/s).
-    * FINAL (remaining tail fits one slice, or the catch-up cap hit):
-      write the ``mgeom_staged`` completion manifest, drop the cursor.
-      Only now will :func:`commit_media_rebootstrap` turn the geometry
-      live — the (now bounded) residue of media ingested since the
-      last catch-up is the late tail the commit re-signs
-      (``batch_id >= wm``, anti-joined against staged ids).
-
-    ``slice_media=None`` runs INIT + one all-remaining slice + FINAL
-    in a single call (the offline/test path — bit-identical staged
-    output, same manifests). Each media keeps its ORIGINAL min
-    batch_id so the ``batch_id < B`` probe filter is untouched.
-    Returns per-call stats (``phase`` = init/slice/final), or None on
-    an empty index."""
-    if not background:
-        for name in ("planes", "mmeta", "sigs", "hists"):
-            recover_index(spark, index_dir, name)
-    fs, _ = _hadoop_fs(spark, index_dir)
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    snap = f"{index_dir}/.mgeom_snap"
-    planes_staged = f"{index_dir}/.planes_staged"
-    sigs_staged = f"{index_dir}/.sigs_staged"
-    live_gen = _mgen_of(read_state(spark, index_dir, "mmeta", MMETA_SCHEMA))
-    prog = read_state(
-        spark, index_dir, "mgeom_progress", MGEOM_PROGRESS_SCHEMA
-    ).collect()
-    # a cursor whose generation is already live is debris from an
-    # abandoned staging (e.g. a synchronous rebuild ran meanwhile):
-    # restart from INIT, which overwrites every staged artifact. Same
-    # if the snapshot vanished under a live cursor (only possible via
-    # external cleanup) — a slice cannot resume without its snapshot.
-    if prog and (
-        int(prog[0].geom_gen) <= live_gen or not fs.exists(jp(snap))
-    ):
-        prog = []
-
-    if not prog:
-        # ---- INIT: snapshot + staged planes + cursor ----
-        gen_next = max(0, live_gen) + 1
-        hists = read_state(spark, index_dir, "hists", HISTS_SCHEMA)
-        collapsed = hists.groupBy("media_id", "bucket").agg(
-            F.first("cnt").alias("cnt"), F.min("batch_id").alias("batch_id")
-        )
-        collapsed.write.mode("overwrite").parquet(snap)
-        snap_df = spark.read.schema(HISTS_SCHEMA).parquet(snap)
-        agg = snap_df.agg(
-            F.countDistinct("media_id").alias("n"),
-            F.coalesce(F.max("batch_id"), F.lit(-1)).alias("wm"),
-        ).first()
-        n = int(agg["n"])
-        if n == 0:
-            return None
-        wm = int(agg["wm"])
-        nbits = _nbits_for(n)
-        planes_new = _build_planes(
-            snap_df.select("media_id", "bucket", "cnt"), nbits
-        ).withColumn("geom_gen", F.lit(gen_next).cast("long"))
-        planes_new.repartition(1).write.mode("overwrite").parquet(
-            planes_staged
-        )
-        # a fresh staging must not inherit a dead one's signatures
-        fs.delete(jp(sigs_staged), True)
-        write_swap(
-            spark,
-            spark.createDataFrame(
-                [(gen_next, wm, nbits, n, -1, 0)], MGEOM_PROGRESS_SCHEMA
-            ),
-            index_dir,
-            "mgeom_progress",
-        )
-        if slice_media is not None:
-            return {
-                "phase": "init",
-                "geom_gen": gen_next,
-                "nbits": nbits,
-                "n_snapshot": n,
-                "wm": wm,
-            }
-        prog = read_state(
-            spark, index_dir, "mgeom_progress", MGEOM_PROGRESS_SCHEMA
-        ).collect()
-
-    # ---- SLICE / CATCHUP / FINAL: advance the cursor ----
-    gen_next, wm, nbits, n, last_id, catchup_rounds = (
-        int(prog[0].geom_gen),
-        int(prog[0].wm),
-        int(prog[0].nbits),
-        int(prog[0].n_snapshot),
-        int(prog[0].last_id),
-        int(prog[0].catchup_rounds or 0),
-    )
-    snap_df = spark.read.schema(HISTS_SCHEMA).parquet(snap)
-    staged_p = spark.read.schema(PLANES_SCHEMA).parquet(planes_staged)
-    remaining = (
-        snap_df.select("media_id")
-        .filter(F.col("media_id") > last_id)
-        .distinct()
-    )
-    if slice_media is not None:
-        slice_ids = remaining.orderBy("media_id").limit(slice_media)
-    else:
-        slice_ids = remaining
-    slice_ids = slice_ids.persist()
-    n_slice = slice_ids.count()
-    if n_slice == 0:
-        slice_ids.unpersist()
-        # ---- CATCHUP: chase media that arrived during the crawl, so
-        # the commit's in-slot tail stays bounded (it grew to staging
-        # duration x rate otherwise — the mechanism that re-blew the
-        # trigger after the snapshot slicing landed). Reads LIVE hists
-        # (the snapshot predates these rows); a compaction swap racing
-        # this read fails the kick, which simply retries next slot.
-        if slice_media is not None and catchup_rounds < MEDIA_CATCHUP_MAX:
-            live = read_state(spark, index_dir, "hists", HISTS_SCHEMA)
-            already = (
-                spark.read.schema(SIGS_SCHEMA)
-                .parquet(sigs_staged)
-                .select("media_id")
-                .distinct()
-            )
-            catch_ids = (
-                live.filter(F.col("batch_id") >= F.lit(wm))
-                .select("media_id")
-                .distinct()
-                .join(already, "media_id", "left_anti")
-                .persist()
-            )
-            n_catch = catch_ids.count()
-            if n_catch > slice_media:
-                ids = catch_ids.orderBy("media_id").limit(slice_media)
-                ch = (
-                    live.join(ids, "media_id", "leftsemi")
-                    # the commit's tail collapse, verbatim
-                    .groupBy("media_id", "bucket")
-                    .agg(
-                        F.first("cnt").alias("cnt"),
-                        F.min("batch_id").alias("batch_id"),
-                    )
-                )
-                bid = ch.groupBy("media_id").agg(
-                    F.min("batch_id").alias("batch_id")
-                )
-                _sign(
-                    ch.select("media_id", "bucket", "cnt"), staged_p, nbits
-                ).join(bid, "media_id").write.mode("append").parquet(
-                    sigs_staged
-                )
-                catch_ids.unpersist()
-                write_swap(
-                    spark,
-                    spark.createDataFrame(
-                        [
-                            (
-                                gen_next,
-                                wm,
-                                nbits,
-                                n,
-                                last_id,
-                                catchup_rounds + 1,
-                            )
-                        ],
-                        MGEOM_PROGRESS_SCHEMA,
-                    ),
-                    index_dir,
-                    "mgeom_progress",
-                )
-                return {
-                    "phase": "catchup",
-                    "geom_gen": gen_next,
-                    "nbits": nbits,
-                    "n_snapshot": n,
-                    "wm": wm,
-                    "slice": min(slice_media, n_catch),
-                    "catchup_left": n_catch - min(slice_media, n_catch),
-                }
-            catch_ids.unpersist()
-        # ---- FINAL: staging complete -> completion manifest ----
-        write_swap(
-            spark,
-            spark.createDataFrame(
-                [(gen_next, wm, nbits, n)], MGEOM_STAGED_SCHEMA
-            ),
-            index_dir,
-            "mgeom_staged",
-        )
-        fs.delete(jp(f"{index_dir}/mgeom_progress"), True)
-        return {
-            "phase": "final",
-            "geom_gen": gen_next,
-            "nbits": nbits,
-            "n_snapshot": n,
-            "wm": wm,
-        }
-    sl_hists = snap_df.join(slice_ids, "media_id", "leftsemi")
-    bid = sl_hists.groupBy("media_id").agg(
+def _assign(hists: DataFrame, planes: DataFrame, nbits: int) -> DataFrame:
+    """Re-sign collapsed histogram rows; each media keeps its first
+    batch_id, so the ``batch_id < B`` probe filter is untouched."""
+    first = hists.groupBy("media_id").agg(
         F.min("batch_id").alias("batch_id")
     )
-    sigs_new = _sign(
-        sl_hists.select("media_id", "bucket", "cnt"), staged_p, nbits
-    ).join(bid, "media_id")
-    if fs.exists(jp(sigs_staged)):
-        # crash idempotency: a slice that appended but died before the
-        # cursor bump re-runs as a no-op
-        already = (
-            spark.read.schema(SIGS_SCHEMA)
-            .parquet(sigs_staged)
-            .select("media_id")
-            .distinct()
-        )
-        sigs_new = sigs_new.join(already, "media_id", "left_anti")
-        sigs_new.write.mode("append").parquet(sigs_staged)
-    else:
-        sigs_new.write.mode("overwrite").parquet(sigs_staged)
-    hi = slice_ids.agg(F.max("media_id")).first()[0]
-    slice_ids.unpersist()
-    write_swap(
-        spark,
-        spark.createDataFrame(
-            [(gen_next, wm, nbits, n, int(hi), 0)], MGEOM_PROGRESS_SCHEMA
-        ),
-        index_dir,
-        "mgeom_progress",
-    )
-    if slice_media is None:
-        # one-shot path: everything signed in the single slice above
-        write_swap(
-            spark,
-            spark.createDataFrame(
-                [(gen_next, wm, nbits, n)], MGEOM_STAGED_SCHEMA
-            ),
-            index_dir,
-            "mgeom_staged",
-        )
-        fs.delete(jp(f"{index_dir}/mgeom_progress"), True)
-        return {
-            "phase": "final",
-            "geom_gen": gen_next,
-            "nbits": nbits,
-            "n_snapshot": n,
-            "wm": wm,
-        }
-    return {
-        "phase": "slice",
-        "geom_gen": gen_next,
-        "nbits": nbits,
-        "n_snapshot": n,
-        "wm": wm,
-        "slice": n_slice,
-        "last_id": int(hi),
-    }
+    sigs = _sign(hists.select("media_id", "bucket", "cnt"), planes, nbits)
+    return sigs.join(first, "media_id")
 
 
-def commit_media_rebootstrap(
-    spark: SparkSession, index_dir: str
-) -> dict | None:
-    """Phase 2 — the maintenance-slot half and the idempotent crash
-    completer: re-sign the LATE TAIL (media whose hists appended since
-    the snapshot — ``batch_id >= wm``, anti-joined against the staged
-    ids so re-runs append nothing twice) against the staged planes,
-    then swap planes, swap sigs, stamp mmeta (gen LAST — the
-    consistency check's other end), drop the manifest. Live sigs are
-    REPLACED wholesale (every indexed media was re-signed into the
-    staged set); hists and the emitted pair history are untouched.
-    Single-writer, like compaction."""
-    for name in ("planes", "mmeta", "sigs", "hists"):
-        recover_index(spark, index_dir, name)
-    man = read_state(
-        spark, index_dir, "mgeom_staged", MGEOM_STAGED_SCHEMA
-    ).collect()
-    if not man:
-        return None
-    gen, wm, nbits = (
-        int(man[0].geom_gen),
-        int(man[0].wm),
-        int(man[0].nbits),
-    )
-    fs, _ = _hadoop_fs(spark, index_dir)
-    jp = spark._jvm.org.apache.hadoop.fs.Path
-    # ADVICE r12 #2 (the streaming/knn.py twin): a manifest whose gen
-    # is already live is debris from a crash between the mmeta stamp
-    # and the manifest delete — its commit COMPLETED; without this
-    # guard it would both block future rebuilds (maybe_prepare sees
-    # "staged") and send this function into swap_in against consumed
-    # staged dirs. Drop the leftovers and report nothing-to-commit.
-    if gen <= _mgen_of(read_state(spark, index_dir, "mmeta", MMETA_SCHEMA)):
-        # drop ONLY the manifest: .mgeom_snap may belong to a NEWER
-        # in-flight sliced staging (its commit already deleted its own
-        # snap; a gen-N+2 staging re-creates it anyway)
-        fs.delete(jp(f"{index_dir}/mgeom_staged"), True)
-        return None
-    planes_staged = f"{index_dir}/.planes_staged"
-    sigs_staged = f"{index_dir}/.sigs_staged"
-    n_tail = 0
-    if fs.exists(jp(planes_staged)):
-        staged_p = spark.read.schema(PLANES_SCHEMA).parquet(planes_staged)
-        staged_ids = (
-            spark.read.schema(SIGS_SCHEMA)
-            .parquet(sigs_staged)
-            .select("media_id")
-            .distinct()
-        )
-        live = read_state(spark, index_dir, "hists", HISTS_SCHEMA)
-        tail_hists = (
-            live.filter(F.col("batch_id") >= F.lit(wm))
-            .join(staged_ids, "media_id", "left_anti")
-            .groupBy("media_id", "bucket")
-            .agg(
-                F.first("cnt").alias("cnt"),
-                F.min("batch_id").alias("batch_id"),
-            )
-            .persist()
-        )
-        tail_bid = tail_hists.groupBy("media_id").agg(
-            F.min("batch_id").alias("batch_id")
-        )
-        tail_sigs = _sign(
-            tail_hists.select("media_id", "bucket", "cnt"), staged_p, nbits
-        ).join(tail_bid, "media_id").persist()
-        n_tail = tail_sigs.select("media_id").distinct().count()
-        if n_tail:
-            tail_sigs.write.mode("append").parquet(sigs_staged)
-        tail_sigs.unpersist()
-        tail_hists.unpersist()
-        # planes first, then sigs, then mmeta: the check at
-        # _ensure_media_geometry_consistent detects a crash anywhere
-        # between the first rename and the mmeta stamp
-        swap_in(spark, index_dir, "planes", planes_staged)
-    swap_in(spark, index_dir, "sigs", sigs_staged)
-    n_media = (
-        read_state(spark, index_dir, "sigs", SIGS_SCHEMA)
-        .select("media_id")
-        .distinct()
-        .count()
-    )
-    write_swap(
-        spark,
-        spark.createDataFrame([(nbits, n_media, gen)], MMETA_SCHEMA),
-        index_dir,
-        "mmeta",
-    )
-    fs.delete(jp(f"{index_dir}/mgeom_staged"), True)
-    fs.delete(jp(f"{index_dir}/.mgeom_snap"), True)
-    # a staging cursor for the generation just committed is debris
-    # (crash between the FINAL manifest write and the cursor delete)
-    prog = read_state(
-        spark, index_dir, "mgeom_progress", MGEOM_PROGRESS_SCHEMA
-    ).collect()
-    if prog and int(prog[0].geom_gen) <= gen:
-        fs.delete(jp(f"{index_dir}/mgeom_progress"), True)
-    return {
-        "media": n_media,
-        "nbits": nbits,
-        "geom_gen": gen,
-        "tail": n_tail,
-    }
-
-
-def rebootstrap_media_index(spark: SparkSession, index_dir: str) -> dict:
-    """Synchronous rebuild — prepare + commit back to back (offline
-    maintenance / tests; a live stream prepares off the slot and
-    commits in it, the streaming/knn.py discipline)."""
-    if prepare_media_rebootstrap(spark, index_dir) is None:
-        return {"media": 0}
-    done = commit_media_rebootstrap(spark, index_dir)
-    return {"media": done["media"], "nbits": done["nbits"]}
-
-
-def _media_growth_due(
-    spark: SparkSession, index_dir: str, growth_factor: float,
-    mutate: bool = True,
-) -> bool:
-    """Trigger: live distinct media >= factor × the base stamped at the
-    last (re)bootstrap. An index predating the base_media column gets
-    one stamped at the CURRENT size (growth measured from now on) and
-    reports not-due; recovery runs before the stamp write.
-
-    ``mutate=False`` (background caller — ADVICE r12 #1) skips both
-    the recovery and the legacy stamp; a legacy index reports not-due
-    until a slot-side call stamps it."""
-    if mutate:
-        recover_index(spark, index_dir, "mmeta")
-    meta = read_state(spark, index_dir, "mmeta", MMETA_SCHEMA).collect()
-    if not meta:
-        return False  # unbootstrapped — nothing to rebuild from
-    n = (
-        read_state(spark, index_dir, "sigs", SIGS_SCHEMA)
-        .select("media_id")
-        .distinct()
-        .count()
-    )
-    base = meta[0].base_media
-    if base is None and not mutate:
-        return False
-    if base is None:
-        gen = max(
-            0,
-            _mgen_of(read_state(spark, index_dir, "planes", PLANES_SCHEMA)),
-        )
-        write_swap(
-            spark,
-            spark.createDataFrame(
-                [(int(meta[0].nbits), n, gen)], MMETA_SCHEMA
-            ),
-            index_dir,
-            "mmeta",
-        )
-        return False
-    return int(base) > 0 and n >= growth_factor * int(base)
-
-
-def maybe_media_rebootstrap(
-    spark: SparkSession, index_dir: str, growth_factor: float = 2.0
-) -> dict | None:
-    """Growth-triggered SYNCHRONOUS geometry rebuild ("re-bootstrap
-    when the corpus has doubled")."""
-    if not _media_growth_due(spark, index_dir, growth_factor):
-        return None
-    return rebootstrap_media_index(spark, index_dir)
-
-
-def maybe_prepare_media_rebootstrap(
-    spark: SparkSession,
-    index_dir: str,
-    growth_factor: float = 2.0,
-    background: bool = False,
-    slice_media: int | None = None,
-) -> dict | None:
-    """The ASYNC trigger: prepare the staged geometry when growth is
-    due and nothing is already staged (run on a background thread with
-    ``background=True`` — skips every mutating recovery step, ADVICE
-    r12 #1; commit in the next maintenance slot).
-
-    ``slice_media=N`` bounds each call to one INIT or one <=N-media
-    re-sign slice (round-12 verdict task 3): an in-flight staging
-    cursor resumes WITHOUT re-checking the growth trigger (the
-    trigger fired when the staging started), so repeated kicks crawl
-    the corpus one bounded slice per maintenance interval. A staged
-    manifest whose gen is already live (ADVICE r12 #2) does not block
-    a new prepare."""
-    staged = read_state(
-        spark, index_dir, "mgeom_staged", MGEOM_STAGED_SCHEMA
-    ).collect()
-    live_gen = _mgen_of(read_state(spark, index_dir, "mmeta", MMETA_SCHEMA))
-    if staged and int(staged[0].geom_gen) > live_gen:
-        return None  # genuinely staged, awaiting its commit slot
-    prog = read_state(
-        spark, index_dir, "mgeom_progress", MGEOM_PROGRESS_SCHEMA
-    ).collect()
-    in_flight = bool(prog) and int(prog[0].geom_gen) > live_gen
-    if not in_flight and not _media_growth_due(
-        spark, index_dir, growth_factor, mutate=not background
-    ):
-        return None
-    return prepare_media_rebootstrap(
-        spark, index_dir, background=background, slice_media=slice_media
-    )
+# The geometry rebuild (state.prepare_rebuild / commit_rebuild): planes
+# and signatures are rebuilt FROM THE LIVE HISTOGRAMS. The featurizer
+# output is geometry-independent, so hists and the emitted pair history
+# are never rotated.
+GEOMETRY = Geometry(
+    geometry="planes",
+    geometry_schema=PLANES_SCHEMA,
+    meta="mmeta",
+    meta_schema=MMETA_SCHEMA,
+    base_col="base_media",
+    rotated="sigs",
+    rotated_schema=SIGS_SCHEMA,
+    source="hists",
+    source_schema=HISTS_SCHEMA,
+    keys=("media_id", "bucket"),
+    build=_build,
+    assign=_assign,
+    meta_row=lambda nbits, base, gen: (nbits, base, gen),
+)

@@ -57,6 +57,28 @@ hygiene item. This module is now the ONE implementation:
   ``update_batch(batch, batch_id, index_dir, **kw)`` callback is wired
   into a query the same way — ``foreachBatch`` + checkpoint + append.
 
+* **generational geometry rebuild** (:func:`prepare_rebuild`,
+  :func:`commit_rebuild`, :func:`ensure_geometry`): the kNN and media
+  indexes freeze a geometry (centroids, SRP planes) that decays as the
+  corpus grows. Each supplies a :class:`Geometry` record — its dir
+  names, ``build(snapshot, n) -> (geometry, param)`` and
+  ``assign(rows, geometry, param) -> rotated rows`` — and this module
+  runs the rebuild once for both. Prepare runs off the maintenance
+  slot, only reads live state (:func:`read_state`) and only writes
+  staged dirs plus the ``rebuild`` record, so it never recovers
+  anything; with ``slice_rows`` each call is one bounded step of
+  INIT (snapshot the collapsed source, build the staged geometry) /
+  SLICE (assign the next ids of the snapshot) / CATCHUP (assign rows
+  that arrived during the crawl, at most :data:`MEDIA_CATCHUP_MAX`
+  rounds) / FINAL (mark the record ``ready``). Commit runs in the
+  slot: it assigns the late tail, swaps the geometry, then the rotated
+  dir, then stamps the meta row's ``geom_gen`` — so a crash anywhere
+  in between leaves geometry and meta generations unequal, which
+  :func:`ensure_geometry` (run before every update batch) detects and
+  repairs by finishing the commit. The record is dropped last; a
+  record whose generation is already live is a finished commit's
+  leftover, and commit only cleans it up (the stale-record guard).
+
 All directory manipulation goes through the Hadoop FileSystem API
 resolved from the index path's own scheme, so the index can live on
 local FS, ``hdfs://`` or ``s3a://`` — NOTE the swap assumes atomic
@@ -169,9 +191,9 @@ def swap_in(spark: SparkSession, index_dir: str, name: str, staged: str) -> bool
     ``<index_dir>/<name>`` — the commit half of a prepared-elsewhere
     rewrite (write_swap minus the write: rename live to ``.{name}_old``,
     rename ``staged`` in, delete old). Pure renames, so the in-slot cost
-    is milliseconds regardless of state size — what lets a ~9 s geometry
-    build run OFF the maintenance slot (streaming/knn.py
-    prepare_rebootstrap / commit_rebootstrap). Returns False when
+    is milliseconds regardless of state size — what lets a geometry
+    build run OFF the maintenance slot (:func:`prepare_rebuild` /
+    :func:`commit_rebuild`). Returns False when
     ``staged`` does not exist (already swapped by a prior attempt — the
     idempotent-completer case), True after a swap."""
     fs, _ = _hadoop_fs(spark, index_dir)
@@ -371,3 +393,386 @@ def list_first_fold(
     for f in files:
         fs.delete(_jp(spark, f), False)
     return out
+
+
+# ---- the generational geometry rebuild (see module doc) -------------
+
+
+class Geometry:
+    """One index's half of the rebuild protocol, a frozen record:
+
+    * ``geometry``/``meta``/``rotated``/``source`` — dir names, each
+      with a ``*_schema``. The geometry schema ends in ``geom_gen`` and
+      the meta row carries it too; ``base_col`` names the meta column
+      holding the key count at the last rebuild (the growth trigger's
+      denominator). ``rotated`` is rewritten against the new geometry;
+      ``source`` is what it is rebuilt from (the same dir for kNN).
+    * ``keys`` — the source's row keys; ``keys[0]`` is the id that
+      slices, tails and growth counts are taken over.
+    * ``build(snapshot, n) -> (geometry_df, param)`` — the geometry
+      without ``geom_gen``, built from the collapsed source snapshot of
+      ``n`` ids; ``param`` is an integer the index needs to assign.
+    * ``assign(rows, geometry_df, param) -> rotated rows`` — for
+      collapsed source rows, keeping each id's first ``batch_id``.
+    * ``meta_row(param, base, gen) -> tuple`` in ``meta_schema``.
+
+    Hand-rolled rather than a dataclass: this module is imported on the
+    ingest path and adds no import."""
+
+    __slots__ = (
+        "geometry", "geometry_schema", "meta", "meta_schema", "base_col",
+        "rotated", "rotated_schema", "source", "source_schema", "keys",
+        "build", "assign", "meta_row",
+    )
+
+    def __init__(self, **fields):
+        for k in self.__slots__:
+            object.__setattr__(self, k, fields.pop(k))
+        if fields:
+            raise TypeError(f"unknown Geometry fields: {sorted(fields)}")
+
+    def __setattr__(self, name, value):
+        raise AttributeError("Geometry is frozen")
+
+
+# The one catch-up bound: after the snapshot crawl, rows that arrived
+# DURING it (batch_id >= wm, not yet staged) are assigned in further
+# bounded slices, so the in-slot commit tail stays near one slice
+# instead of growing with crawl duration x ingest rate. If the tail
+# still exceeds a slice after this many rounds (arrivals outpace the
+# crawl), the record is marked ready anyway and the commit pays the
+# rest, visible in its returned "tail". (Named when only the media
+# index sliced.)
+MEDIA_CATCHUP_MAX = 16
+# The rebuild record: the staging cursor and the completion mark in
+# one row. phase "staging": last_id is the largest snapshot id staged
+# (NULL before the first slice); phase "ready": commit may swap.
+REBUILD = "rebuild"
+REBUILD_SCHEMA = (
+    "geom_gen long, phase string, wm long, param long, n_snapshot long,"
+    " last_id long, catchup_rounds long"
+)
+_SNAP = ".rebuild_snap"
+
+
+def generation(df: DataFrame) -> int:
+    """Max ``geom_gen`` of a geometry or meta frame (NULL reads 0);
+    -1 when empty, so an absent index skips the consistency check."""
+    row = df.agg(F.max(F.coalesce(F.col("geom_gen"), F.lit(0)))).first()
+    return -1 if row[0] is None else int(row[0])
+
+
+def _drop(spark: SparkSession, index_dir: str, name: str) -> None:
+    fs, _ = _hadoop_fs(spark, index_dir)
+    fs.delete(_jp(spark, f"{index_dir}/{name}"), True)
+
+
+def _record(spark: SparkSession, index_dir: str) -> dict | None:
+    rows = read_state(spark, index_dir, REBUILD, REBUILD_SCHEMA).collect()
+    return rows[0].asDict() if rows else None
+
+
+def _put_record(spark: SparkSession, index_dir: str, rec: dict) -> None:
+    cols = [c.split()[0] for c in REBUILD_SCHEMA.split(",")]
+    write_swap(
+        spark,
+        spark.createDataFrame([tuple(rec[c] for c in cols)], REBUILD_SCHEMA),
+        index_dir,
+        REBUILD,
+    )
+
+
+def _live_gen(spark: SparkSession, index_dir: str, spec: Geometry) -> int:
+    return generation(
+        read_state(spark, index_dir, spec.meta, spec.meta_schema)
+    )
+
+
+def _stage(
+    spark: SparkSession,
+    index_dir: str,
+    spec: Geometry,
+    rows: DataFrame,
+    param: int,
+) -> None:
+    """Assign collapsed source ``rows`` to the staged geometry and
+    append them to the staged rotated dir, skipping ids already there
+    (a step that appended but crashed before its record write re-runs
+    as a no-op)."""
+    staged = f"{index_dir}/.{spec.rotated}_staged"
+    fresh = rows.join(
+        _read_index(spark, staged, spec.rotated_schema).select(spec.keys[0]),
+        spec.keys[0],
+        "left_anti",
+    )
+    geometry = spark.read.schema(spec.geometry_schema).parquet(
+        f"{index_dir}/.{spec.geometry}_staged"
+    )
+    spec.assign(fresh, geometry, param).write.mode("append").parquet(staged)
+
+
+def _late_rows(
+    spark: SparkSession, index_dir: str, spec: Geometry, wm: int
+) -> DataFrame:
+    """Source rows appended since the snapshot (``batch_id >= wm`` —
+    the snapshot may hold a partial view of batch wm) whose id is not
+    staged yet."""
+    staged = _read_index(
+        spark, f"{index_dir}/.{spec.rotated}_staged", spec.rotated_schema
+    ).select(spec.keys[0])
+    return (
+        read_state(spark, index_dir, spec.source, spec.source_schema)
+        .filter(F.col("batch_id") >= F.lit(wm))
+        .join(staged, spec.keys[0], "left_anti")
+    )
+
+
+def _rebuild_due(
+    spark: SparkSession, index_dir: str, spec: Geometry, growth_factor: float
+) -> bool:
+    """Live distinct ids of the rotated dir >= factor x the base the
+    meta row stamped at the last (re)build. Read-only; an index with no
+    meta (or no base) is never due."""
+    meta = read_state(spark, index_dir, spec.meta, spec.meta_schema).collect()
+    base = meta[0][spec.base_col] if meta else None
+    if not base:
+        return False
+    n = (
+        read_state(spark, index_dir, spec.rotated, spec.rotated_schema)
+        .select(spec.keys[0])
+        .distinct()
+        .count()
+    )
+    return n >= growth_factor * base
+
+
+def _init(
+    spark: SparkSession, index_dir: str, spec: Geometry, gen: int
+) -> dict | None:
+    """INIT: snapshot the collapsed source (one stable file set for
+    every later slice), build the staged geometry, write the record."""
+    idc = spec.keys[0]
+    snap = f"{index_dir}/{_SNAP}"
+    first_batch_rows(
+        read_state(spark, index_dir, spec.source, spec.source_schema),
+        spec.keys,
+    ).write.mode("overwrite").parquet(snap)
+    snap_df = spark.read.schema(spec.source_schema).parquet(snap)
+    agg = snap_df.agg(
+        F.countDistinct(idc), F.coalesce(F.max("batch_id"), F.lit(-1))
+    ).first()
+    n = int(agg[0])
+    if n == 0:
+        _drop(spark, index_dir, _SNAP)
+        return None
+    geometry, param = spec.build(snap_df, n)
+    geometry.withColumn("geom_gen", F.lit(gen).cast("long")).repartition(
+        1
+    ).write.mode("overwrite").parquet(f"{index_dir}/.{spec.geometry}_staged")
+    # a fresh staging must not inherit a dead one's rows
+    _drop(spark, index_dir, f".{spec.rotated}_staged")
+    rec = {
+        "geom_gen": gen,
+        "phase": "staging",
+        "wm": int(agg[1]),
+        "param": int(param),
+        "n_snapshot": n,
+        "last_id": None,
+        "catchup_rounds": 0,
+    }
+    _put_record(spark, index_dir, rec)
+    return rec
+
+
+def _stats(rec: dict) -> dict:
+    return {
+        k: rec[k] for k in ("geom_gen", "param", "n_snapshot", "wm")
+    }
+
+
+def prepare_rebuild(
+    spark: SparkSession,
+    index_dir: str,
+    spec: Geometry,
+    growth_factor: float,
+    slice_rows: int | None = None,
+) -> dict | None:
+    """The off-slot half: when the index has grown ``growth_factor``
+    times past its last (re)build, stage the next geometry (see module
+    doc). Safe to run concurrently with update batches: it reads live
+    state only through :func:`read_state` and writes only the staged
+    dirs and the record.
+
+    ``slice_rows=N`` makes each call one bounded step (INIT, a SLICE or
+    CATCHUP of <= N ids, or FINAL); a staging in flight resumes without
+    re-checking growth. ``slice_rows=None`` runs every step in one call.
+    Returns the step's stats (``phase`` init/slice/catchup/final), or
+    None when not due, already staged, or awaiting commit's cleanup."""
+    fs, _ = _hadoop_fs(spark, index_dir)
+    live_gen = _live_gen(spark, index_dir, spec)
+    rec = _record(spark, index_dir)
+    if rec is not None and (
+        rec["phase"] == "ready" or rec["geom_gen"] <= live_gen
+    ):
+        return None
+    snap = f"{index_dir}/{_SNAP}"
+    if rec is None or not (
+        fs.exists(_jp(spark, snap))
+        and fs.exists(_jp(spark, f"{index_dir}/.{spec.geometry}_staged"))
+    ):
+        # a cursor whose snapshot vanished cannot resume: restart INIT
+        if rec is None and not _rebuild_due(
+            spark, index_dir, spec, growth_factor
+        ):
+            return None
+        rec = _init(spark, index_dir, spec, max(0, live_gen) + 1)
+        if rec is None:
+            return None
+        if slice_rows is not None:
+            return {"phase": "init", **_stats(rec)}
+
+    idc = spec.keys[0]
+    snap_df = spark.read.schema(spec.source_schema).parquet(snap)
+    while True:  # SLICE until the snapshot is staged (once if one-shot)
+        ids = snap_df.select(idc).distinct()
+        if rec["last_id"] is not None:
+            ids = ids.filter(F.col(idc) > F.lit(rec["last_id"]))
+        if slice_rows is not None:
+            ids = ids.orderBy(idc).limit(slice_rows)
+        ids = ids.persist()
+        n_slice, hi = ids.agg(F.count("*"), F.max(idc)).first()
+        if n_slice:
+            _stage(
+                spark,
+                index_dir,
+                spec,
+                snap_df.join(ids, idc, "leftsemi"),
+                rec["param"],
+            )
+        ids.unpersist()
+        if not n_slice:
+            break
+        rec = {**rec, "last_id": int(hi)}
+        _put_record(spark, index_dir, rec)
+        if slice_rows is not None:
+            return {
+                "phase": "slice",
+                **_stats(rec),
+                "slice": n_slice,
+                "last_id": int(hi),
+            }
+
+    if slice_rows is not None and rec["catchup_rounds"] < MEDIA_CATCHUP_MAX:
+        # CATCHUP: reads LIVE source (the snapshot predates these rows);
+        # a compaction swap racing the read fails the call, which the
+        # caller simply retries
+        late = _late_rows(spark, index_dir, spec, rec["wm"])
+        late_ids = late.select(idc).distinct().persist()
+        n_late = late_ids.count()
+        if n_late > slice_rows:
+            ids = late_ids.orderBy(idc).limit(slice_rows)
+            _stage(
+                spark,
+                index_dir,
+                spec,
+                first_batch_rows(late.join(ids, idc, "leftsemi"), spec.keys),
+                rec["param"],
+            )
+            late_ids.unpersist()
+            rec = {**rec, "catchup_rounds": rec["catchup_rounds"] + 1}
+            _put_record(spark, index_dir, rec)
+            return {
+                "phase": "catchup",
+                **_stats(rec),
+                "slice": slice_rows,
+                "catchup_left": n_late - slice_rows,
+            }
+        late_ids.unpersist()
+    # FINAL: staging complete; commit turns it live
+    rec = {**rec, "phase": "ready"}
+    _put_record(spark, index_dir, rec)
+    return {"phase": "final", **_stats(rec)}
+
+
+def commit_rebuild(
+    spark: SparkSession, index_dir: str, spec: Geometry
+) -> dict | None:
+    """The in-slot half, and the idempotent completer of every crash
+    window: when the record is ``ready``, assign the late tail (source
+    rows since the snapshot) to the staged geometry, swap the geometry,
+    swap the rotated dir, stamp the meta row with the new base and
+    ``geom_gen``, then drop the snapshot and, last, the record. Cost is
+    O(tail) plus renames. Single-writer, like compaction. Returns
+    ``{geom_gen, param, base, tail}``, or None when nothing was
+    committed."""
+    for name in dict.fromkeys(
+        (spec.geometry, spec.meta, spec.rotated, spec.source)
+    ):
+        recover_index(spark, index_dir, name)
+    rec = _record(spark, index_dir)
+    if rec is None:
+        return None
+    gen = rec["geom_gen"]
+    pending = gen > _live_gen(spark, index_dir, spec)
+    if pending and rec["phase"] != "ready":
+        return None  # still staging: the record is prepare's
+    recover_index(spark, index_dir, REBUILD)
+    out = None
+    # the stale-record guard: a record whose generation is already live
+    # is a finished commit whose cleanup crashed — re-stamping meta now
+    # would count rows appended since as the new base
+    if pending:
+        fs, _ = _hadoop_fs(spark, index_dir)
+        geometry_staged = f"{index_dir}/.{spec.geometry}_staged"
+        n_tail = 0
+        if fs.exists(_jp(spark, geometry_staged)):
+            tail = first_batch_rows(
+                _late_rows(spark, index_dir, spec, rec["wm"]), spec.keys
+            ).persist()
+            n_tail = tail.select(spec.keys[0]).distinct().count()
+            if n_tail:
+                _stage(spark, index_dir, spec, tail, rec["param"])
+            tail.unpersist()
+            swap_in(spark, index_dir, spec.geometry, geometry_staged)
+        rotated_staged = f"{index_dir}/.{spec.rotated}_staged"
+        swap_in(spark, index_dir, spec.rotated, rotated_staged)
+        base = (
+            read_state(spark, index_dir, spec.rotated, spec.rotated_schema)
+            .select(spec.keys[0])
+            .distinct()
+            .count()
+        )
+        write_swap(
+            spark,
+            spark.createDataFrame(
+                [spec.meta_row(rec["param"], base, gen)], spec.meta_schema
+            ),
+            index_dir,
+            spec.meta,
+        )
+        out = {
+            "geom_gen": gen,
+            "param": rec["param"],
+            "base": base,
+            "tail": n_tail,
+        }
+    _drop(spark, index_dir, _SNAP)
+    _drop(spark, index_dir, REBUILD)
+    return out
+
+
+def ensure_geometry(
+    spark: SparkSession, index_dir: str, spec: Geometry
+) -> None:
+    """Run before every update batch: unequal geometry and meta
+    generations mean a commit crashed between its first swap and its
+    meta stamp, and a probe now would join rows against a geometry
+    from another generation. Finish the commit first. Cost when
+    consistent: two tiny aggregates."""
+    g_geo = generation(
+        read_state(spark, index_dir, spec.geometry, spec.geometry_schema)
+    )
+    g_meta = _live_gen(spark, index_dir, spec)
+    if g_geo < 0 or g_meta < 0 or g_geo == g_meta:
+        return
+    commit_rebuild(spark, index_dir, spec)

@@ -203,13 +203,15 @@ def test_gprs_pipeline_plan_stays_staged(spark):
     the 44-way split is computed once and md5 exactly 4 times per row —
     a Spark upgrade that lets CollapseProject/PushPredicateThroughNonJoin
     cross the barrier would re-expand to 44 md5s / per-field splits and
-    must fail here."""
+    must fail here. Expression counts read the optimized plan: the
+    adaptive executed plan's string omits aggregate result
+    expressions, so an md5 computed in an aggregate would not show."""
     from sparkstreamingflume_spark.plans import REGISTRY
 
     plan = (
         REGISTRY["q_gprs_pipeline"]
         .build(spark, "/root/testdata/sf0.001")
-        ._jdf.queryExecution().executedPlan().toString()
+        ._jdf.queryExecution().optimizedPlan().toString()
     )
     assert plan.count("md5(") == 4, plan.count("md5(")
     assert plan.count("split(") == 1, plan.count("split(")
@@ -251,11 +253,15 @@ def test_line_family_splits_once_and_filter_stays_staged(spark):
         "q_field_drop",
         "q_field_extract",
     ):
-        plan = (
-            REGISTRY[name].build(spark, sf)
-            ._jdf.queryExecution().executedPlan().toString()
+        # the split count on the optimized plan (it shows aggregate
+        # result expressions); the filter's place among the operators
+        # on the executed plan
+        qe = REGISTRY[name].build(spark, sf)._jdf.queryExecution()
+        logical = qe.optimizedPlan().toString()
+        plan = qe.executedPlan().toString()
+        assert logical.count("split(") == 1, (
+            f"{name}: split re-expanded:\n{logical}"
         )
-        assert plan.count("split(") == 1, f"{name}: split re-expanded:\n{plan}"
         if name == "q_dirty_filter":
             # ADVICE r13 #2: reuse the loop's plan (not a second build)
             # and anchor on the FilterExec operator line ("Filter (" /

@@ -62,6 +62,20 @@ def _edges(spark, ix):
     return {tuple(r) for r in read_edges(spark, str(ix)).collect()}
 
 
+def _rebuild(spark, ix, growth_factor=2.0):
+    """One-shot prepare + commit (the production pair); the commit's
+    stats, or None when no rebuild was due."""
+    from sparkstreamingflume_spark.streaming.knn import GEOMETRY
+    from sparkstreamingflume_spark.streaming.state import (
+        commit_rebuild,
+        prepare_rebuild,
+    )
+
+    if prepare_rebuild(spark, str(ix), GEOMETRY, growth_factor) is None:
+        return None
+    return commit_rebuild(spark, str(ix), GEOMETRY)
+
+
 def _expected_topk(qv, cand, k=5):
     """Brute-force (nbr_id, cos_ppm, rn) list for one query vector over
     a {vec_id: vec} candidate dict — ppm floor, score desc, id asc."""
@@ -250,7 +264,7 @@ def test_rebootstrap_preserves_edges_and_rebuilds_geometry(
     spark, tmp_path
 ):
     """Round-10 verdict task 4: the growth-triggered geometry rebuild.
-    (a) maybe_rebootstrap fires once members reach growth_factor x the
+    (a) the rebuild fires once members reach growth_factor x the
     last-stamped base and re-stamps, so it does NOT fire again at the
     same size; (b) EDGE ROWS are preserved verbatim across the swap
     (the backward-looking contract — a geometry change must not
@@ -269,7 +283,6 @@ def test_rebootstrap_preserves_edges_and_rebuilds_geometry(
         MEMBERS_SCHEMA,
         bootstrap_knn_index,
         knn_update_batch,
-        maybe_rebootstrap,
     )
     from sparkstreamingflume_spark.streaming.state import read_state
 
@@ -283,16 +296,16 @@ def test_rebootstrap_preserves_edges_and_rebuilds_geometry(
     bootstrap_knn_index(spark, corpus, str(ix))
 
     # below the 2x growth bar: no rebuild
-    assert maybe_rebootstrap(spark, str(ix)) is None
+    assert _rebuild(spark, ix) is None
 
     knn_update_batch(_batch_df(spark, growth), 0, str(ix), nprobe=8)
     pre_edges = _edges(spark, ix)
-    stats = maybe_rebootstrap(spark, str(ix))  # 30 -> ~90 members: fires
-    assert stats is not None and stats["members"] > 60
+    stats = _rebuild(spark, ix)  # 30 -> ~90 members: fires
+    assert stats is not None and stats["base"] > 60
     # (b) edges verbatim
     assert _edges(spark, ix) == pre_edges
     # (a) re-stamped base: same size does not fire again
-    assert maybe_rebootstrap(spark, str(ix)) is None
+    assert _rebuild(spark, ix) is None
 
     # (c) geometry: k formula + every member in its nearest new cell
     members = {
@@ -342,7 +355,7 @@ def test_async_rebootstrap_stages_off_slot_and_commits_late_tail(
     spark, tmp_path
 ):
     """Round-11 verdict task 3: the geometry build runs OFF the
-    maintenance slot. (a) maybe_prepare_rebootstrap fires at the
+    maintenance slot. (a) prepare_rebuild fires at the
     growth bar and builds STAGED dirs without touching live state —
     probes between prepare and commit still serve the OLD geometry;
     (b) vectors ingested between prepare and commit (the late tail)
@@ -357,14 +370,16 @@ def test_async_rebootstrap_stages_off_slot_and_commits_late_tail(
     )
     from sparkstreamingflume_spark.streaming.knn import (
         CENTS_SCHEMA,
+        GEOMETRY,
         MEMBERS_SCHEMA,
         bootstrap_knn_index,
-        commit_rebootstrap,
         knn_update_batch,
-        maybe_prepare_rebootstrap,
-        maybe_rebootstrap,
     )
-    from sparkstreamingflume_spark.streaming.state import read_state
+    from sparkstreamingflume_spark.streaming.state import (
+        commit_rebuild,
+        prepare_rebuild,
+        read_state,
+    )
 
     vecs = _vectors()
     ids = sorted(vecs)
@@ -376,25 +391,25 @@ def test_async_rebootstrap_stages_off_slot_and_commits_late_tail(
     ix = tmp_path / "ix"
     bootstrap_knn_index(spark, corpus, str(ix))
 
-    assert maybe_prepare_rebootstrap(spark, str(ix)) is None  # below bar
+    assert prepare_rebuild(spark, str(ix), GEOMETRY, 2.0) is None  # below bar
     knn_update_batch(_batch_df(spark, growth), 0, str(ix), nprobe=8)
 
-    st = maybe_prepare_rebootstrap(spark, str(ix))
+    st = prepare_rebuild(spark, str(ix), GEOMETRY, 2.0)
     assert st is not None and st["n_snapshot"] == 90
     # (a) live geometry untouched by the staged build
     cents_live = read_state(spark, str(ix), "cents", CENTS_SCHEMA)
     assert {int(r.geom_gen or 0) for r in cents_live.collect()} == {0}
     # (d) nothing re-staged while one build is pending
-    assert maybe_prepare_rebootstrap(spark, str(ix)) is None
+    assert prepare_rebuild(spark, str(ix), GEOMETRY, 2.0) is None
 
     # (b) the late tail arrives BETWEEN prepare and commit
     knn_update_batch(_batch_df(spark, late), 1, str(ix), nprobe=8)
     pre_edges = _edges(spark, ix)
 
-    done = commit_rebootstrap(spark, str(ix))
+    done = commit_rebuild(spark, str(ix), GEOMETRY)
     assert done is not None
     assert done["geom_gen"] == 1 and done["tail"] == len(late)
-    assert done["members"] == 105
+    assert done["base"] == 105
     # (c) edges verbatim
     assert _edges(spark, ix) == pre_edges
 
@@ -430,7 +445,7 @@ def test_async_rebootstrap_stages_off_slot_and_commits_late_tail(
         assert cid == best, (vid, cid, best)
 
     # base re-stamped: the trigger does not re-fire at the same size
-    assert maybe_rebootstrap(spark, str(ix)) is None
+    assert prepare_rebuild(spark, str(ix), GEOMETRY, 2.0) is None
 
     # (e) post-commit ingest exact at full probe
     knn_update_batch(_batch_df(spark, tail), 2, str(ix), nprobe=16)
@@ -448,100 +463,23 @@ def test_async_rebootstrap_stages_off_slot_and_commits_late_tail(
     assert got == want
 
 
-def test_crash_between_commit_swaps_is_detected_and_repaired(
+def test_prepare_never_recovers_and_a_stale_record_does_not_wedge(
     spark, tmp_path
 ):
-    """ADVICE r11 #3: a crash between the cents swap and the meta
-    stamp leaves new-geometry cents against old-geometry members;
-    knn_update_batch must detect the generation mismatch BEFORE
-    probing and finish the staged commit, so no probe ever joins
-    members against centroids from a different geometry. Simulated by
-    running exactly the first rename of the commit sequence."""
+    """Prepare runs off the slot next to the slot's own swaps, so it
+    must leave their debris alone: a ``.members_old`` / ``.meta_tmp``
+    survives it, and the slot-side commit recovers them. A record whose
+    generation is already live (a commit that crashed before dropping
+    it) blocks prepare only until the next commit drops it."""
     from sparkstreamingflume_spark.streaming.knn import (
-        CENTS_SCHEMA,
-        META_SCHEMA,
-        _gen_of,
+        GEOMETRY,
         bootstrap_knn_index,
         knn_update_batch,
-        prepare_rebootstrap,
     )
     from sparkstreamingflume_spark.streaming.state import (
-        read_state,
-        swap_in,
-    )
-
-    vecs = _vectors()
-    ids = sorted(vecs)
-    boot = {i: vecs[i] for i in ids[:30]}
-    growth = {i: vecs[i] for i in ids[30:90]}
-    tail = {i: vecs[i] for i in ids[90:110]}
-    corpus = _write_corpus(spark, str(tmp_path / "c0"), boot)
-    ix = tmp_path / "ix"
-    bootstrap_knn_index(spark, corpus, str(ix))
-    knn_update_batch(_batch_df(spark, growth), 0, str(ix), nprobe=8)
-    pre_edges = _edges(spark, ix)
-
-    assert prepare_rebootstrap(spark, str(ix)) is not None
-    # simulated crash: ONLY the cents rename lands
-    assert swap_in(spark, str(ix), "cents", f"{ix}/.cents_staged")
-    g_c = _gen_of(read_state(spark, str(ix), "cents", CENTS_SCHEMA))
-    g_m = _gen_of(read_state(spark, str(ix), "meta", META_SCHEMA))
-    assert (g_c, g_m) == (1, 0)  # the mixed window, observable
-
-    # the next batch self-heals before probing, then ingests exactly
-    knn_update_batch(_batch_df(spark, tail), 1, str(ix), nprobe=16)
-    assert _gen_of(
-        read_state(spark, str(ix), "cents", CENTS_SCHEMA)
-    ) == 1
-    assert _gen_of(
-        read_state(spark, str(ix), "meta", META_SCHEMA)
-    ) == 1
-    # staged manifest consumed by the repair
-    from sparkstreamingflume_spark.streaming.knn import (
-        GEOM_STAGED_SCHEMA,
-    )
-
-    assert (
-        read_state(
-            spark, str(ix), "geom_staged", GEOM_STAGED_SCHEMA
-        ).count()
-        == 0
-    )
-
-    got = _edges(spark, ix)
-    want = set(pre_edges)
-    prior = dict(boot)
-    prior.update(growth)
-    tail_ids = sorted(tail)
-    for pos, q in enumerate(tail_ids):
-        cand = dict(prior)
-        cand.update({i: vecs[i] for i in tail_ids[:pos]})
-        for nbr, p, rn in _expected_topk(vecs[q], cand):
-            want.add((q, nbr, p, rn))
-    assert got == want
-
-def test_stale_manifest_self_heals_and_background_prepare_is_pure(
-    spark, tmp_path
-):
-    """ADVICE r12 #1/#2 pins. (1) A completion manifest whose geom_gen
-    is already live (a crash between the meta stamp and the manifest
-    delete) must neither wedge commit_rebootstrap nor permanently
-    block growth rebuilds: the commit drops it and reports
-    nothing-to-commit, and maybe_prepare_rebootstrap treats it as
-    not-staged. (2) A background prepare performs NO mutating crash
-    recovery: leftover .{name}_tmp / .{name}_old debris (a slot-side
-    write_swap in flight) survives a background maybe_prepare
-    untouched — only slot-side maintenance may recover it."""
-    import os
-
-    from sparkstreamingflume_spark.streaming.knn import (
-        GEOM_STAGED_SCHEMA,
-        bootstrap_knn_index,
-        commit_rebootstrap,
-        knn_update_batch,
-        maybe_prepare_rebootstrap,
-    )
-    from sparkstreamingflume_spark.streaming.state import (
+        REBUILD_SCHEMA,
+        commit_rebuild,
+        prepare_rebuild,
         read_state,
         write_swap,
     )
@@ -554,42 +492,25 @@ def test_stale_manifest_self_heals_and_background_prepare_is_pure(
     ix = tmp_path / "ix"
     bootstrap_knn_index(spark, corpus, str(ix))
     knn_update_batch(_batch_df(spark, growth), 0, str(ix), nprobe=8)
-
-    # (1) plant a stale manifest: gen 0 is already live
-    write_swap(
-        spark,
-        spark.createDataFrame([(0, -1, 8, 30)], GEOM_STAGED_SCHEMA),
-        str(ix),
-        "geom_staged",
-    )
     pre_edges = _edges(spark, ix)
-    assert commit_rebootstrap(spark, str(ix)) is None
-    assert (
-        read_state(spark, str(ix), "geom_staged", GEOM_STAGED_SCHEMA).count()
-        == 0
-    )
-    assert _edges(spark, ix) == pre_edges
 
-    # plant it again: the async trigger must see THROUGH it (growth is
-    # due at factor 1.2 — 90 >= 1.2*30) and stage the real rebuild
     write_swap(
         spark,
-        spark.createDataFrame([(0, -1, 8, 30)], GEOM_STAGED_SCHEMA),
+        spark.createDataFrame([(0, "ready", -1, 8, 30, 29, 0)], REBUILD_SCHEMA),
         str(ix),
-        "geom_staged",
+        "rebuild",
     )
-    # (2) slot-side swap-in-flight debris a background call must not touch
-    debris = str(ix / ".members_old")
-    os.makedirs(debris, exist_ok=True)
-    st = maybe_prepare_rebootstrap(spark, str(ix), 1.2, background=True)
-    assert st is not None and st["geom_gen"] == 1
-    assert os.path.isdir(debris), "background prepare ran recovery"
-    os.rmdir(debris)
+    assert prepare_rebuild(spark, str(ix), GEOMETRY, 1.2) is None
+    assert commit_rebuild(spark, str(ix), GEOMETRY) is None
+    assert read_state(spark, str(ix), "rebuild", REBUILD_SCHEMA).count() == 0
 
-    man = read_state(
-        spark, str(ix), "geom_staged", GEOM_STAGED_SCHEMA
-    ).collect()
-    assert len(man) == 1 and int(man[0].geom_gen) == 1
-    done = commit_rebootstrap(spark, str(ix))
+    debris = [ix / ".members_old", ix / ".meta_tmp"]
+    for d in debris:
+        os.makedirs(d)
+    st = prepare_rebuild(spark, str(ix), GEOMETRY, 1.2)
+    assert st is not None and st["geom_gen"] == 1
+    assert all(os.path.isdir(d) for d in debris), "prepare ran recovery"
+    done = commit_rebuild(spark, str(ix), GEOMETRY)
     assert done is not None and done["geom_gen"] == 1
+    assert not any(os.path.exists(d) for d in debris)
     assert _edges(spark, ix) == pre_edges

@@ -229,17 +229,19 @@ def test_media_rebootstrap_rotates_geometry_to_the_batch_plan(
     from pyspark.sql import functions as FF
 
     from sparkstreamingflume_spark.streaming.media_neardup import (
+        GEOMETRY,
         MMETA_SCHEMA,
         PLANES_SCHEMA,
         SIGS_SCHEMA,
-        _mgen_of,
         bootstrap_media_index,
-        maybe_media_rebootstrap,
-        maybe_prepare_media_rebootstrap,
-        commit_media_rebootstrap,
         media_neardup_batch,
     )
-    from sparkstreamingflume_spark.streaming.state import read_state
+    from sparkstreamingflume_spark.streaming.state import (
+        commit_rebuild,
+        generation,
+        prepare_rebuild,
+        read_state,
+    )
 
     sub = _subset_fixture(spark, tmp_path)  # ids 0..399, ceiling-clean
     ix, out = tmp_path / "ix", tmp_path / "out"
@@ -248,24 +250,24 @@ def test_media_rebootstrap_rotates_geometry_to_the_batch_plan(
     )
     assert st["media"] == 250
     # below the growth bar at factor 2.0
-    assert maybe_prepare_media_rebootstrap(spark, str(ix)) is None
+    assert prepare_rebuild(spark, str(ix), GEOMETRY, 2.0) is None
 
     media_neardup_batch(_media(spark, sub, hi=100), 0, str(ix), str(out))
 
     # 350 >= 1.2 * 250: prepare stages, commit rotates
-    prep = maybe_prepare_media_rebootstrap(spark, str(ix), 1.2)
+    prep = prepare_rebuild(spark, str(ix), GEOMETRY, 1.2)
     assert prep is not None and prep["geom_gen"] == 1
     # staged build touched no live state
-    assert _mgen_of(
+    assert generation(
         read_state(spark, str(ix), "planes", PLANES_SCHEMA)
     ) == 0
-    assert maybe_prepare_media_rebootstrap(spark, str(ix), 1.2) is None
-    done = commit_media_rebootstrap(spark, str(ix))
-    assert done is not None and done["media"] == 350
-    assert _mgen_of(
+    assert prepare_rebuild(spark, str(ix), GEOMETRY, 1.2) is None
+    done = commit_rebuild(spark, str(ix), GEOMETRY)
+    assert done is not None and done["base"] == 350
+    assert generation(
         read_state(spark, str(ix), "planes", PLANES_SCHEMA)
     ) == 1
-    assert _mgen_of(
+    assert generation(
         read_state(spark, str(ix), "mmeta", MMETA_SCHEMA)
     ) == 1
     # every media re-signed, original batch_id provenance preserved
@@ -280,7 +282,7 @@ def test_media_rebootstrap_rotates_geometry_to_the_batch_plan(
     before = set(_got_pairs(spark, out))
 
     # the trigger re-stamped: no re-fire at the same size
-    assert maybe_media_rebootstrap(spark, str(ix), 1.2) is None
+    assert prepare_rebuild(spark, str(ix), GEOMETRY, 1.2) is None
 
     media_neardup_batch(_media(spark, sub, lo=350), 1, str(ix), str(out))
     got = _got_pairs(spark, out)
@@ -293,75 +295,6 @@ def test_media_rebootstrap_rotates_geometry_to_the_batch_plan(
     assert new_pairs == want_new
     assert want_new, "fixture must add pairs in the post-rotation batch"
 
-
-def test_media_rebootstrap_crash_between_swaps_self_heals(
-    spark, tmp_path
-):
-    """A crash between the planes rename and the mmeta stamp leaves
-    new-generation planes against old-generation meta/sigs; the next
-    batch detects the generation mismatch BEFORE signing, finishes the
-    staged commit, and then emits exactly what the clean path would
-    have."""
-    from sparkstreamingflume_spark.streaming.media_neardup import (
-        MMETA_SCHEMA,
-        PLANES_SCHEMA,
-        MGEOM_STAGED_SCHEMA,
-        _mgen_of,
-        bootstrap_media_index,
-        commit_media_rebootstrap,
-        media_neardup_batch,
-        prepare_media_rebootstrap,
-    )
-    from sparkstreamingflume_spark.streaming.state import (
-        read_state,
-        swap_in,
-    )
-
-    sub = _subset_fixture(spark, tmp_path)
-
-    def run(ix, out, crash):
-        bootstrap_media_index(
-            spark,
-            _media(spark, sub, lo=100, hi=350),
-            str(ix),
-            out_dir=str(out),
-        )
-        media_neardup_batch(_media(spark, sub, hi=100), 0, str(ix), str(out))
-        assert prepare_media_rebootstrap(spark, str(ix)) is not None
-        if crash:
-            # simulated crash: ONLY the planes rename lands
-            assert swap_in(
-                spark, str(ix), "planes", f"{ix}/.planes_staged"
-            )
-            assert (
-                _mgen_of(
-                    read_state(spark, str(ix), "planes", PLANES_SCHEMA)
-                ),
-                _mgen_of(
-                    read_state(spark, str(ix), "mmeta", MMETA_SCHEMA)
-                ),
-            ) == (1, 0)
-        else:
-            commit_media_rebootstrap(spark, str(ix))
-        media_neardup_batch(_media(spark, sub, lo=350), 1, str(ix), str(out))
-        return _got_pairs(spark, out)
-
-    crashed = run(tmp_path / "ix1", tmp_path / "out1", crash=True)
-    clean = run(tmp_path / "ix2", tmp_path / "out2", crash=False)
-    assert crashed == clean
-    ix1 = tmp_path / "ix1"
-    assert _mgen_of(
-        read_state(spark, str(ix1), "planes", PLANES_SCHEMA)
-    ) == 1
-    assert _mgen_of(
-        read_state(spark, str(ix1), "mmeta", MMETA_SCHEMA)
-    ) == 1
-    assert (
-        read_state(
-            spark, str(ix1), "mgeom_staged", MGEOM_STAGED_SCHEMA
-        ).count()
-        == 0
-    )
 
 def test_media_rotation_landing_while_bucket_over_ceiling(spark, tmp_path):
     """Round-12 verdict task 8 — the last untested interaction: a
@@ -377,14 +310,17 @@ def test_media_rotation_landing_while_bucket_over_ceiling(spark, tmp_path):
         MEDIA_NEARDUP_MIN_PPM,
     )
     from sparkstreamingflume_spark.streaming.media_neardup import (
+        GEOMETRY,
         MMETA_SCHEMA,
-        _mgen_of,
         bootstrap_media_index,
-        commit_media_rebootstrap,
-        maybe_prepare_media_rebootstrap,
         media_neardup_batch,
     )
-    from sparkstreamingflume_spark.streaming.state import read_state
+    from sparkstreamingflume_spark.streaming.state import (
+        commit_rebuild,
+        generation,
+        prepare_rebuild,
+        read_state,
+    )
 
     want = _expected_pairs(spark)  # certified batch query, full SF
     ix, out = tmp_path / "ix", tmp_path / "out"
@@ -397,10 +333,10 @@ def test_media_rotation_landing_while_bucket_over_ceiling(spark, tmp_path):
     # the rotation lands HERE: live corpus = ids 0..349, so the new
     # planes coincide with the batch plan's seeds (ids 0..79), while
     # the overflow bucket's members are already partly indexed
-    prep = maybe_prepare_media_rebootstrap(spark, str(ix), 1.2)
+    prep = prepare_rebuild(spark, str(ix), GEOMETRY, 1.2)
     assert prep is not None and prep["geom_gen"] == 1
-    assert commit_media_rebootstrap(spark, str(ix)) is not None
-    assert _mgen_of(read_state(spark, str(ix), "mmeta", MMETA_SCHEMA)) == 1
+    assert commit_rebuild(spark, str(ix), GEOMETRY) is not None
+    assert generation(read_state(spark, str(ix), "mmeta", MMETA_SCHEMA)) == 1
 
     media_neardup_batch(_media(spark, lo=350), 1, str(ix), str(out))
     got = _got_pairs(spark, out)
@@ -415,121 +351,26 @@ def test_media_rotation_landing_while_bucket_over_ceiling(spark, tmp_path):
     assert all(got[k] >= MEDIA_NEARDUP_MIN_PPM for k in extras)
 
 
-def test_media_sliced_staging_crawl_matches_one_shot(spark, tmp_path):
-    """Round-12 verdict task 3 — the bounded re-sign: crawling the
-    staging in small slices across repeated maybe_prepare kicks (the
-    soak's background cadence) must produce the IDENTICAL rotated
-    index and post-rotation pairs as the one-shot prepare, with no
-    live state touched and nothing committable until the final slice
-    lands the completion manifest."""
-    from pyspark.sql import functions as FF
-
-    from sparkstreamingflume_spark.streaming.media_neardup import (
-        MGEOM_STAGED_SCHEMA,
-        MMETA_SCHEMA,
-        PLANES_SCHEMA,
-        SIGS_SCHEMA,
-        _mgen_of,
-        bootstrap_media_index,
-        commit_media_rebootstrap,
-        maybe_prepare_media_rebootstrap,
-        media_neardup_batch,
-        prepare_media_rebootstrap,
-    )
-    from sparkstreamingflume_spark.streaming.state import read_state
-
-    sub = _subset_fixture(spark, tmp_path)
-
-    def run(ix, out, sliced):
-        bootstrap_media_index(
-            spark,
-            _media(spark, sub, lo=100, hi=350),
-            str(ix),
-            out_dir=str(out),
-        )
-        media_neardup_batch(_media(spark, sub, hi=100), 0, str(ix), str(out))
-        if sliced:
-            phases = []
-            for _ in range(20):
-                st = maybe_prepare_media_rebootstrap(
-                    spark, str(ix), 1.2, background=True, slice_media=90
-                )
-                assert st is not None, "crawl must not stall mid-staging"
-                phases.append(st["phase"])
-                # mid-staging: live geometry untouched, nothing to commit
-                assert _mgen_of(
-                    read_state(spark, str(ix), "planes", PLANES_SCHEMA)
-                ) == 0
-                if st["phase"] == "final":
-                    break
-                assert commit_media_rebootstrap(spark, str(ix)) is None
-            assert phases[0] == "init" and phases[-1] == "final"
-            assert phases.count("slice") == 4  # ceil(350/90)
-            # staged, awaiting commit: no further prepare fires
-            assert (
-                maybe_prepare_media_rebootstrap(
-                    spark, str(ix), 1.2, background=True, slice_media=90
-                )
-                is None
-            )
-        else:
-            assert prepare_media_rebootstrap(spark, str(ix)) is not None
-        done = commit_media_rebootstrap(spark, str(ix))
-        assert done is not None and done["media"] == 350
-        media_neardup_batch(_media(spark, sub, lo=350), 1, str(ix), str(out))
-        sigs = read_state(spark, str(ix), "sigs", SIGS_SCHEMA)
-        return _got_pairs(spark, out), {
-            tuple(r)
-            for r in sigs.select(
-                "media_id", "band", "band_sig"
-            ).collect()
-        }
-
-    pairs_sliced, sigs_sliced = run(
-        tmp_path / "ix1", tmp_path / "out1", sliced=True
-    )
-    pairs_once, sigs_once = run(
-        tmp_path / "ix2", tmp_path / "out2", sliced=False
-    )
-    assert pairs_sliced == pairs_once
-    assert sigs_sliced == sigs_once
-    # ADVICE r12 #2: plant a stale completion manifest (its gen already
-    # live) — the slot-side commit must self-heal by dropping it, and
-    # the async trigger must not be blocked by it
-    from sparkstreamingflume_spark.streaming.state import write_swap
-
-    ix1 = str(tmp_path / "ix1")
-    write_swap(
-        spark,
-        spark.createDataFrame([(1, 0, 10, 350)], MGEOM_STAGED_SCHEMA),
-        ix1,
-        "mgeom_staged",
-    )
-    assert commit_media_rebootstrap(spark, ix1) is None
-    assert (
-        read_state(spark, ix1, "mgeom_staged", MGEOM_STAGED_SCHEMA).count()
-        == 0
-    )
-    assert _mgen_of(read_state(spark, ix1, "mmeta", MMETA_SCHEMA)) == 1
-
 def test_media_staging_catchup_bounds_the_commit_tail(spark, tmp_path):
     """Media that arrive WHILE the sliced staging crawls must be
     absorbed by background CATCHUP slices, leaving the in-slot commit
     only a sub-slice residue (the unsliced design measured an 18k-doc
     tail after an 8-interval crawl — the tail grew with staging
     duration x rate). Also pins: the catch-up geometry equals the
-    one-shot synchronous rebuild's bit-for-bit."""
+    one-shot rebuild's bit-for-bit."""
     from pyspark.sql import functions as FF
 
     from sparkstreamingflume_spark.streaming.media_neardup import (
+        GEOMETRY,
         SIGS_SCHEMA,
         bootstrap_media_index,
-        commit_media_rebootstrap,
-        maybe_prepare_media_rebootstrap,
         media_neardup_batch,
-        rebootstrap_media_index,
     )
-    from sparkstreamingflume_spark.streaming.state import read_state
+    from sparkstreamingflume_spark.streaming.state import (
+        commit_rebuild,
+        prepare_rebuild,
+        read_state,
+    )
 
     sub = _subset_fixture(spark, tmp_path)
 
@@ -547,9 +388,7 @@ def test_media_staging_catchup_bounds_the_commit_tail(spark, tmp_path):
     phases = []
     mid_batch_done = False
     for _ in range(40):
-        st = maybe_prepare_media_rebootstrap(
-            spark, str(ix), 1.2, background=True, slice_media=30
-        )
+        st = prepare_rebuild(spark, str(ix), GEOMETRY, 1.2, slice_rows=30)
         assert st is not None, "crawl must not stall mid-staging"
         phases.append(st["phase"])
         if st["phase"] == "final":
@@ -563,8 +402,8 @@ def test_media_staging_catchup_bounds_the_commit_tail(spark, tmp_path):
     assert phases[-1] == "final"
     n_catch = phases.count("catchup")
     assert n_catch == 1, phases  # 50 arrivals: one 30-slice, 20 residue
-    done = commit_media_rebootstrap(spark, str(ix))
-    assert done is not None and done["media"] == 400
+    done = commit_rebuild(spark, str(ix), GEOMETRY)
+    assert done is not None and done["base"] == 400
     assert done["tail"] == 20  # the residue, not the full 50
 
     # geometry parity: an identical corpus rebuilt one-shot must sign
@@ -572,7 +411,8 @@ def test_media_staging_catchup_bounds_the_commit_tail(spark, tmp_path):
     ix2, out2 = tmp_path / "ix2", tmp_path / "out2"
     ingest(ix2, out2)
     media_neardup_batch(_media(spark, sub, lo=350), 1, str(ix2), str(out2))
-    rebootstrap_media_index(spark, str(ix2))
+    assert prepare_rebuild(spark, str(ix2), GEOMETRY, 1.2) is not None
+    assert commit_rebuild(spark, str(ix2), GEOMETRY) is not None
     sig_of = lambda ixp: {
         tuple(r)
         for r in read_state(spark, str(ixp), "sigs", SIGS_SCHEMA)

@@ -51,7 +51,7 @@ p99-vs-trigger claim is auditable.
 
 Knobs (environment): SOAK_TRIGGER_S, COMPACT_EVERY (default 6),
 KNN_REBOOT_FACTOR, MEDIA_BOOT_N, MEDIA_REBOOT_FACTOR,
-MEDIA_RESIGN_SLICE, SOAK_DEBUG.
+RESIGN_SLICE, SOAK_DEBUG.
 Prints one JSON line with batch-duration percentiles, sustained rate,
 and (for stateful modes) state-store rows/bytes (max + last batch).
 """
@@ -101,13 +101,12 @@ COMPACT_EVERY = int(os.environ.get("COMPACT_EVERY", "6"))
 KNN_REBOOT_FACTOR = float(os.environ.get("KNN_REBOOT_FACTOR", "2.0"))
 MEDIA_BOOT_N = int(os.environ.get("MEDIA_BOOT_N", "20000"))
 MEDIA_REBOOT_FACTOR = float(os.environ.get("MEDIA_REBOOT_FACTOR", "2.0"))
-# the media prepare's re-sign is CORPUS-sized (unlike knn's
-# centroid-sized build): slice it so each background kick does one
-# bounded chunk and the staging crawls across maintenance intervals
-# (round-12 verdict task 3 — the one-shot build blew the
-# rotation-concurrent batch to p99 24.9 s > the 20 s trigger even at
-# FAIR weight 1)
-MEDIA_RESIGN_SLICE = int(os.environ.get("MEDIA_RESIGN_SLICE", "4000"))
+# a rebuild's re-assignment is CORPUS-sized: both rows slice it, so each
+# background kick does one bounded chunk and the staging crawls across
+# maintenance intervals (round-12 verdict task 3 — media's one-shot
+# build blew the rotation-concurrent batch to p99 24.9 s > the 20 s
+# trigger even at FAIR weight 1; a one-shot knn prepare ran 23-46 s)
+RESIGN_SLICE = int(os.environ.get("RESIGN_SLICE", "4000"))
 SOAK_TRIGGER_S = os.environ.get("SOAK_TRIGGER_S")
 SOAK_DEBUG = os.environ.get("SOAK_DEBUG")
 # the fresh 16-byte per-row block holds ~3% of payload mass,
@@ -730,12 +729,10 @@ MODES = {
         subdirs=("members", "edges"),
         check=check_knn,
         boot=boot_knn,
-        # background=True: no mutating recovery off-slot (ADVICE r12
-        # #1 — recovery belongs to the slot)
-        prepare=lambda s, ix: KN.maybe_prepare_rebootstrap(
-            s, ix, KNN_REBOOT_FACTOR, background=True
+        prepare=lambda s, ix: state.prepare_rebuild(
+            s, ix, KN.GEOMETRY, KNN_REBOOT_FACTOR, slice_rows=RESIGN_SLICE
         ),
-        commit=KN.commit_rebootstrap,
+        commit=lambda s, ix: state.commit_rebuild(s, ix, KN.GEOMETRY),
     ),
     # media probes the persisted (band, band_sig) signature index per
     # batch (featurize + sign + bucket join + exact verify) — same
@@ -749,14 +746,10 @@ MODES = {
         subdirs=("sigs", "hists"),
         check=check_media,
         boot=boot_media,
-        prepare=lambda s, ix: MN.maybe_prepare_media_rebootstrap(
-            s,
-            ix,
-            MEDIA_REBOOT_FACTOR,
-            background=True,
-            slice_media=MEDIA_RESIGN_SLICE,
+        prepare=lambda s, ix: state.prepare_rebuild(
+            s, ix, MN.GEOMETRY, MEDIA_REBOOT_FACTOR, slice_rows=RESIGN_SLICE
         ),
-        commit=MN.commit_media_rebootstrap,
+        commit=lambda s, ix: state.commit_rebuild(s, ix, MN.GEOMETRY),
     ),
 }
 
